@@ -80,14 +80,18 @@ object SparkEntry {
     // local filesystem — a `java.io.File` walk returns 0 on remote URIs and
     // silently pinned the fallback advisory there (round-16 verdict item 2).
     // An unreachable/unknown URI still degrades to 0 bytes → advisory left at
-    // the session default, the documented at-scale posture.
-    val bytes = dirBytesMemo.computeIfAbsent(dir, d => {
-      try {
-        val p = new org.apache.hadoop.fs.Path(d)
+    // the session default, the documented at-scale posture. Only a positive
+    // size is memoized: a failed lookup (a transient storage fault) or a
+    // directory that is missing or empty is asked again on the next call.
+    val bytes: Long = Option(dirBytesMemo.get(dir)).fold {
+      val n = try {
+        val p = new org.apache.hadoop.fs.Path(dir)
         val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
         if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
       } catch { case scala.util.control.NonFatal(_) => 0L }
-    })
+      if (n > 0L) dirBytesMemo.put(dir, n)
+      n
+    }(_.longValue)
     if (bytes > 0L) {
       val cores = spark.sparkContext.defaultParallelism.toLong.max(1L)
       val advisory = (bytes / (4L * cores)).max(1L << 20).min(64L << 20)

@@ -1,6 +1,7 @@
 package graft.sources
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
@@ -8,6 +9,8 @@ import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Tabl
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.write._
+import org.apache.spark.sql.execution.datasources.FilePartition
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -32,7 +35,12 @@ import scala.jdk.CollectionConverters._
   *                     values as compact JSON
   *   - `source_file`   document name for lineage
   *
-  * Scale shape: one InputPartition per source document, fetch + parse runs on
+  * Scale shape: documents are packed into scan partitions by Spark's own
+  * file-split rule ([[GeoJsonDataSource.pack]]: next-fit in input order, up
+  * to `FilePartition.maxSplitBytes` per partition, each document charged its
+  * bytes plus `spark.sql.files.openCostInBytes`), so a read of many small
+  * documents runs one task per core-sized split rather than one per document
+  * while a large document keeps a task of its own. Fetch + parse runs on
   * executors (a 100 TB crawl is many documents, not one big one), and column
   * pruning is pushed into the reader (SupportsPushDownRequiredColumns) so a
   * properties-only query never materializes coordinate arrays.
@@ -76,6 +84,56 @@ object GeoJsonDataSource {
     val all = fromPaths ++ fromPath ++ fromUrl
     require(all.nonEmpty, "geojson: specify load(path) or option(\"url\", ...)")
     all
+  }
+
+  /** Byte size of a document that resolves to a local file (bare path or
+    * `file:` url); None for the remote-fetch seam or a missing file.
+    */
+  def localSize(doc: String): Option[Long] = {
+    val f = new java.io.File(if (doc.startsWith("file:")) new java.net.URI(doc).getPath else doc)
+    if (f.isFile) Some(f.length()) else None
+  }
+
+  /** Documents whose file name every keep-set (pushed or runtime
+    * `source_file` values) contains and whose `.bbox` sidecar, if any, can
+    * meet the pushed envelope predicates; runs on the driver, before fetch.
+    */
+  def prune(docs: Seq[String], keeps: Seq[Option[Set[String]]],
+            bboxPreds: Seq[GeoJsonBbox.BboxPred]): Seq[String] =
+    docs.filter(d => keeps.flatten.forall(_.contains(d.split('/').last)))
+      .filter(GeoJsonBbox.keepDoc(_, bboxPreds))
+
+  /** Packs the surviving documents into scan partitions by Spark's file-split
+    * rule: `maxSplit = min(maxPartitionBytes, max(openCostInBytes,
+    * (Σ bytes + n·openCostInBytes) / leaf parallelism))`
+    * (`FilePartition.maxSplitBytes`), filled next-fit in input order with
+    * each document charged its bytes plus `openCostInBytes`, exactly as a
+    * file scan fills its `FilePartition`s. Documents are never split, so one
+    * larger than `maxSplit` gets a partition of its own, and so does one that
+    * cannot be sized locally. Pruning happens before this call, so a pruned
+    * document is never fetched; input order is kept across partitions.
+    */
+  def pack(docs: Seq[String]): Array[InputPartition] = {
+    val openCost = SQLConf.get.filesOpenCostInBytes
+    val sized = docs.map(d => d -> localSize(d))
+    val maxSplit = FilePartition.maxSplitBytes(SparkSession.active,
+      sized.flatMap(_._2).map(_ + openCost).sum)
+    val parts = Array.newBuilder[InputPartition]
+    val current = scala.collection.mutable.ArrayBuffer.empty[String]
+    var currentSize = 0L
+    def close(): Unit = if (current.nonEmpty) {
+      parts += GeoJsonInputPartition(current.toList)
+      current.clear(); currentSize = 0L
+    }
+    sized.foreach {
+      case (doc, Some(bytes)) =>
+        if (currentSize + bytes > maxSplit) close()
+        current += doc; currentSize += bytes + openCost
+      case (doc, None) =>
+        close(); parts += GeoJsonInputPartition(Seq(doc))
+    }
+    close()
+    parts.result()
   }
 }
 
@@ -268,11 +326,11 @@ class GeoJsonScanBuilder(options: CaseInsensitiveStringMap)
   }
 }
 
-/** The COUNT(*)-pushed scan: same document pruning as the row scan, but each
-  * partition returns a single row holding the document's matching-feature
-  * count. The schema is the aggregation's output schema (one non-null LONG),
-  * which is what `SupportsPushDownAggregates` requires of a partial
-  * pushdown.
+/** The COUNT(*)-pushed scan: same document pruning and packing as the row
+  * scan, but each partition returns one row per packed document holding that
+  * document's matching-feature count. The schema is the aggregation's output
+  * schema (one non-null LONG), which is what `SupportsPushDownAggregates`
+  * requires of a partial pushdown.
   */
 class GeoJsonCountScan(paths: Seq[String], fileKeep: Option[Set[String]],
                        geomKeep: Option[Set[String]],
@@ -282,12 +340,10 @@ class GeoJsonCountScan(paths: Seq[String], fileKeep: Option[Set[String]],
   override def readSchema(): StructType =
     new StructType().add("count(*)", LongType, nullable = false)
   override def toBatch: Batch = this
-  private def prunedPaths: Seq[String] = {
-    val named = fileKeep.fold(paths)(keep => paths.filter(p => keep.contains(p.split('/').last)))
-    named.filter(GeoJsonBbox.keepDoc(_, bboxPreds))
-  }
+  private def prunedPaths: Seq[String] =
+    GeoJsonDataSource.prune(paths, Seq(fileKeep), bboxPreds)
   override def planInputPartitions(): Array[InputPartition] =
-    prunedPaths.map(GeoJsonInputPartition.apply).toArray
+    GeoJsonDataSource.pack(prunedPaths)
   override def createReaderFactory(): PartitionReaderFactory =
     new GeoJsonCountReaderFactory(geomKeep, geomNonNull, bboxPreds)
   override def description(): String =
@@ -301,8 +357,8 @@ class GeoJsonCountReaderFactory(geomKeep: Option[Set[String]],
                                 bboxPreds: Seq[GeoJsonBbox.BboxPred] = Seq.empty)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new GeoJsonCountReader(partition.asInstanceOf[GeoJsonInputPartition].path,
-      geomKeep, geomNonNull, bboxPreds)
+    new GeoJsonDocsReader(partition,
+      new GeoJsonCountReader(_, geomKeep, geomNonNull, bboxPreds))
 }
 
 /** Counts matching features in one document without building any row. */
@@ -324,11 +380,11 @@ class GeoJsonCountReader(path: String, geomKeep: Option[Set[String]],
   override def close(): Unit = ()
 }
 
-/** The GROUP BY geometry_type COUNT(*)-pushed scan: same document pruning as
-  * the row scan; each partition returns one row per geometry type seen in
-  * its document (null included — a feature with no geometry groups under
-  * null exactly as the row scan + aggregate would). Output schema is the
-  * grouping column followed by the count, the layout
+/** The GROUP BY geometry_type COUNT(*)-pushed scan: same document pruning and
+  * packing as the row scan; each partition returns one row per geometry type
+  * seen in each of its documents (null included — a feature with no geometry
+  * groups under null exactly as the row scan + aggregate would). Output schema
+  * is the grouping column followed by the count, the layout
   * `SupportsPushDownAggregates` requires of a partial group-by pushdown.
   */
 class GeoJsonGroupCountScan(paths: Seq[String], fileKeep: Option[Set[String]],
@@ -340,12 +396,10 @@ class GeoJsonGroupCountScan(paths: Seq[String], fileKeep: Option[Set[String]],
     new StructType().add("geometry_type", StringType)
       .add("count(*)", LongType, nullable = false)
   override def toBatch: Batch = this
-  private def prunedPaths: Seq[String] = {
-    val named = fileKeep.fold(paths)(keep => paths.filter(p => keep.contains(p.split('/').last)))
-    named.filter(GeoJsonBbox.keepDoc(_, bboxPreds))
-  }
+  private def prunedPaths: Seq[String] =
+    GeoJsonDataSource.prune(paths, Seq(fileKeep), bboxPreds)
   override def planInputPartitions(): Array[InputPartition] =
-    prunedPaths.map(GeoJsonInputPartition.apply).toArray
+    GeoJsonDataSource.pack(prunedPaths)
   override def createReaderFactory(): PartitionReaderFactory =
     new GeoJsonGroupCountReaderFactory(geomKeep, geomNonNull, bboxPreds)
   override def description(): String =
@@ -359,8 +413,8 @@ class GeoJsonGroupCountReaderFactory(geomKeep: Option[Set[String]],
                                      bboxPreds: Seq[GeoJsonBbox.BboxPred] = Seq.empty)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new GeoJsonGroupCountReader(partition.asInstanceOf[GeoJsonInputPartition].path,
-      geomKeep, geomNonNull, bboxPreds)
+    new GeoJsonDocsReader(partition,
+      new GeoJsonGroupCountReader(_, geomKeep, geomNonNull, bboxPreds))
 }
 
 /** Tallies matching features per geometry type in one document without
@@ -412,8 +466,13 @@ class GeoJsonScan(paths: Seq[String], required: StructType,
     * pushdown path but driven by ANOTHER table's rows.
     */
   private var runtimeKeep: Option[Set[String]] = None
+  // only a column the scan still outputs can be advertised: Spark resolves
+  // filter attributes against the pruned output, and a join on another
+  // column of a scan whose `source_file` was pruned away would fail to plan
   override def filterAttributes(): Array[org.apache.spark.sql.connector.expressions.NamedReference] =
-    Array(org.apache.spark.sql.connector.expressions.Expressions.column("source_file"))
+    if (required.fieldNames.contains("source_file"))
+      Array(org.apache.spark.sql.connector.expressions.Expressions.column("source_file"))
+    else Array.empty
   override def filter(filters: Array[org.apache.spark.sql.sources.Filter]): Unit = {
     import org.apache.spark.sql.sources.{EqualTo, In}
     filters.foreach {
@@ -432,13 +491,9 @@ class GeoJsonScan(paths: Seq[String], required: StructType,
     * partition pruning shrinks a parquet scan's.
     */
   override def estimateStatistics(): Statistics = {
-    val sizes = prunedPaths.map { p =>
-      val f = new java.io.File(
-        if (p.startsWith("file:")) new java.net.URI(p).getPath else p)
-      if (f.isFile) f.length() else -1L
-    }
-    val total = if (sizes.exists(_ < 0)) java.util.OptionalLong.empty()
-                else java.util.OptionalLong.of(math.max(1L, sizes.sum))
+    val sizes = prunedPaths.map(GeoJsonDataSource.localSize)
+    val total = if (sizes.exists(_.isEmpty)) java.util.OptionalLong.empty()
+                else java.util.OptionalLong.of(math.max(1L, sizes.flatten.sum))
     new Statistics {
       override def sizeInBytes(): java.util.OptionalLong = total
       override def numRows(): java.util.OptionalLong = java.util.OptionalLong.empty()
@@ -447,15 +502,10 @@ class GeoJsonScan(paths: Seq[String], required: StructType,
   /** Documents surviving the pushed source_file pruning AND any runtime
     * (join-driven) pruning delivered through [[filter]].
     */
-  def prunedPaths: Seq[String] = {
-    val static = fileKeep.fold(paths)(keep => paths.filter(p => keep.contains(p.split('/').last)))
-    val named = runtimeKeep.fold(static)(keep => static.filter(p => keep.contains(p.split('/').last)))
-    // spatial document pruning: a `.bbox` sidecar disjoint from the pushed
-    // envelope predicates proves no feature can match — dropped BEFORE fetch
-    named.filter(GeoJsonBbox.keepDoc(_, bboxPreds))
-  }
+  def prunedPaths: Seq[String] =
+    GeoJsonDataSource.prune(paths, Seq(fileKeep, runtimeKeep), bboxPreds)
   override def planInputPartitions(): Array[InputPartition] =
-    prunedPaths.map(GeoJsonInputPartition.apply).toArray
+    GeoJsonDataSource.pack(prunedPaths)
   override def createReaderFactory(): PartitionReaderFactory =
     new GeoJsonReaderFactory(required, geomKeep, geomNonNull, limit, bboxPreds)
   override def description(): String =
@@ -471,12 +521,36 @@ class GeoJsonScan(paths: Seq[String], required: StructType,
   }
 }
 
-case class GeoJsonInputPartition(path: String) extends InputPartition
+/** The documents one scan task reads, in input order ([[GeoJsonDataSource.pack]]). */
+case class GeoJsonInputPartition(docs: Seq[String]) extends InputPartition
+
+/** Walks a packed partition's documents in order, one per-document reader at
+  * a time, so `feature_idx`, `source_file`, the pushed filters, the LIMIT cap
+  * and the COUNT / GROUP BY tallies keep their per-document meaning. A
+  * document is fetched only when the walk reaches it.
+  */
+class GeoJsonDocsReader(partition: InputPartition,
+                        open: String => PartitionReader[InternalRow])
+    extends PartitionReader[InternalRow] {
+  private val docs = partition.asInstanceOf[GeoJsonInputPartition].docs.iterator
+  private var current: PartitionReader[InternalRow] = _
+  override def next(): Boolean = {
+    while (current == null || !current.next()) {
+      close()
+      if (!docs.hasNext) { current = null; return false }
+      current = open(docs.next())
+    }
+    true
+  }
+  override def get(): InternalRow = current.get()
+  override def close(): Unit = if (current != null) current.close()
+}
 
 /** Streaming read over a document-QUEUE directory: each micro-batch picks up
-  * the `.geojson`/`.json` files that arrived since the last batch, one input
-  * partition per document through the same fetch+parse path as the batch
-  * read, so batch and stream see identical rows for identical documents.
+  * the `.geojson`/`.json` files that arrived since the last batch, packed
+  * into input partitions by the batch read's file-split rule
+  * ([[GeoJsonDataSource.pack]]) and read through the same fetch+parse path,
+  * so batch and stream see identical rows for identical documents.
   *
   * Offset model: a lexicographic filename watermark. The queue contract is
   * that producers name files in monotonically increasing order (timestamped
@@ -507,8 +581,7 @@ class GeoJsonMicroBatchStream(dir: String, required: StructType)
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val lo = start.asInstanceOf[GeoJsonStreamOffset].watermark
     val hi = end.asInstanceOf[GeoJsonStreamOffset].watermark
-    listDocs().filter(p => p > lo && p <= hi)
-      .map(GeoJsonInputPartition.apply).toArray
+    GeoJsonDataSource.pack(listDocs().filter(p => p > lo && p <= hi))
   }
   override def createReaderFactory(): PartitionReaderFactory =
     new GeoJsonReaderFactory(required)
@@ -733,8 +806,8 @@ class GeoJsonReaderFactory(required: StructType,
                            bboxPreds: Seq[GeoJsonBbox.BboxPred] = Seq.empty)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new GeoJsonPartitionReader(partition.asInstanceOf[GeoJsonInputPartition].path, required,
-      geomKeep, geomNonNull, limit, bboxPreds)
+    new GeoJsonDocsReader(partition,
+      new GeoJsonPartitionReader(_, required, geomKeep, geomNonNull, limit, bboxPreds))
 }
 
 /** Parses one document and streams its features as InternalRows, building

@@ -1,6 +1,8 @@
 package graft
 
-import graft.sources.GeoJson
+import graft.sources.{GeoJson, GeoJsonInputPartition}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions.{broadcast, col}
 import java.nio.file.Files
 
@@ -524,5 +526,132 @@ class GeoJsonSourceSpec extends SparkSpec {
     assert(plan.contains("GeoJsonCountScan"),
       s"bbox filter must not block COUNT(*) pushdown:\n$plan")
     assert(agg.head().getLong(0) == 2L)
+  }
+
+  // ---- packing documents into scan partitions ----
+
+  /** Runs `body` with the given session settings, then restores them. */
+  private def withConf[T](kv: (String, String)*)(body: => T): T = {
+    val prior = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prior.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
+  /** Pins the split rule's inputs: 1,000 bytes open cost, the given leaf
+    * parallelism, the default 128 MB partition cap.
+    */
+  private def packed[T](parallelism: Int)(body: => T): T = withConf(
+    "spark.sql.files.openCostInBytes" -> "1000",
+    "spark.sql.files.minPartitionNum" -> parallelism.toString)(body)
+
+  /** The same documents with a 1-byte partition cap: every document is its
+    * own partition, the pre-packing layout.
+    */
+  private def oneDocEach[T](body: => T): T =
+    packed(4)(withConf("spark.sql.files.maxPartitionBytes" -> "1")(body))
+
+  /** Documents of each scan partition of a read, by file name. */
+  private def layout(df: DataFrame): Seq[Seq[String]] =
+    df.queryExecution.executedPlan.collectFirst { case s: BatchScanExec => s.scan }.get
+      .toBatch.planInputPartitions().toSeq
+      .map(_.asInstanceOf[GeoJsonInputPartition].docs.map(_.split('/').last))
+
+  /** `n` documents of identical size in one directory, in name order. */
+  private def sameSizeDocs(prefix: String, n: Int): Seq[String] = {
+    val dir = Files.createTempDirectory("geojson-pack").toFile
+    (1 to n).map { i =>
+      val f = new java.io.File(dir, f"$prefix$i%02d.json")
+      Files.writeString(f.toPath, s"""{"type": "FeatureCollection", "features": [$feature]}""")
+      f.getAbsolutePath
+    }
+  }
+
+  test("small documents pack into the partition count Spark's split rule predicts") {
+    val docs = sameSizeDocs("p", 8)
+    val size = new java.io.File(docs.head).length()
+    packed(4) {
+      // charge = bytes + openCost; maxSplit = max(openCost, n·charge / 4);
+      // next-fit holds a document while the partition's charge plus its
+      // bytes stays within maxSplit
+      val charge = size + 1000
+      val maxSplit = math.max(1000L, docs.size * charge / 4)
+      val perPartition = ((maxSplit - size) / charge + 1).toInt
+      val predicted = (docs.size + perPartition - 1) / perPartition
+      val got = layout(spark.read.format("geojson").load(docs: _*))
+      assert(got.size == predicted, s"layout $got, predicted $predicted partitions")
+      assert(got.size == 4, s"8 equal documents on 4-way parallelism: $got")
+      // input order is kept across and within partitions
+      assert(got.flatten == docs.map(_.split('/').last))
+    }
+  }
+
+  test("a document larger than the split size gets a partition of its own") {
+    val small = sameSizeDocs("s", 4)
+    val big = tmpFile("big.json",
+      s"""{"type": "FeatureCollection", "features": [${Seq.fill(60)(feature).mkString(",")}]}""")
+    packed(4) {
+      val docs = small.take(2) ++ Seq(big) ++ small.drop(2)
+      val total = docs.map(d => new java.io.File(d).length() + 1000).sum
+      assert(new java.io.File(big).length() > total / 4, "fixture: big must exceed maxSplit")
+      val got = layout(spark.read.format("geojson").load(docs: _*))
+      assert(got == Seq(Seq("s01.json", "s02.json"), Seq("big.json"), Seq("s03.json", "s04.json")),
+        s"layout $got")
+    }
+  }
+
+  test("a single-document read is one partition") {
+    val doc = tmpFile("one.json", s"""{"type": "FeatureCollection", "features": [$feature, $feature]}""")
+    packed(4) {
+      assert(layout(spark.read.format("geojson").load(doc)) == Seq(Seq("one.json")))
+    }
+  }
+
+  test("a packed read returns what a one-document-per-partition read returns") {
+    val noGeom = """{"type": "Feature", "properties": {"route_id": "RN"}, "geometry": null}"""
+    val docs = Seq(
+      tmpFile("m1.json", s"""{"type": "FeatureCollection", "features": [$feature, $pointFeature, $feature]}"""),
+      tmpFile("m2.json", feature),
+      tmpFile("m3.json", s"[$multiFeature, $noGeom, $feature]"),
+      tmpFile("m4.json", s"""{"type": "FeatureCollection", "features": [$pointFeature]}"""),
+      tmpFile("m5.json", s"""{"type": "FeatureCollection", "features": [$feature, $multiFeature, $pointFeature, $feature]}"""))
+    def read() = spark.read.format("geojson").load(docs: _*)
+    def results = {
+      val rows = read().collect().toSeq
+      val lineString = read().filter(col("geometry_type") === "LineString")
+        .select("feature_idx", "source_file").collect().toSeq
+      val count = read().groupBy().count().head().getLong(0)
+      val byType = read().groupBy("geometry_type").count().collect().toSet
+      val limited = read().filter(col("geometry_type") === "LineString").limit(3)
+        .select("feature_idx", "source_file").collect().toSeq
+      (rows, lineString, count, byType, limited)
+    }
+    val (unpackedLayout, unpacked) = oneDocEach((layout(read()), results))
+    // two-way parallelism: the five documents pack into two or three tasks
+    val (packedLayout, got) = packed(2)((layout(read()), results))
+    assert(unpackedLayout.size == docs.size, s"reference layout $unpackedLayout")
+    assert(packedLayout.size < docs.size, s"documents were not packed: $packedLayout")
+    def multiset(rs: Seq[Row]) = rs.groupBy(_.toString).view.mapValues(_.size).toMap
+    assert(multiset(got._1) == multiset(unpacked._1), "rows differ")
+    assert(got._1.size == 12)
+    assert(multiset(got._2) == multiset(unpacked._2), "filtered rows differ")
+    assert(got._3 == unpacked._3 && got._3 == 12L, s"COUNT(*) ${got._3} vs ${unpacked._3}")
+    assert(got._4 == unpacked._4, s"GROUP BY geometry_type ${got._4} vs ${unpacked._4}")
+    assert(got._5 == unpacked._5, s"LIMIT ${got._5} vs ${unpacked._5}")
+  }
+
+  test("a join on another column of a scan whose source_file was pruned plans and runs") {
+    import spark.implicits._
+    // the join reaches the connector scan through route_id; runtime
+    // filtering may be offered only on a column the pruned scan still has
+    val fc = tmpFile("rj.json", s"""{"type": "FeatureCollection", "features": [$feature, $multiFeature]}""")
+    val routes = Pipeline.processRoutesNative(spark, fc)
+      .select(col("properties")("route_id").as("route_id"), col("lat"), col("lon"))
+    val dimPath = Files.createTempDirectory("geojson-rj").resolve("dim.parquet").toString
+    Seq(("R1", "keep"), ("R2", "drop")).toDF("route_id", "tag")
+      .write.mode("overwrite").parquet(dimPath)
+    val dim = spark.read.parquet(dimPath).filter(col("tag") === "keep")
+    val joined = routes.join(dim, "route_id")
+    assert(joined.select("route_id").collect().map(_.getString(0)).toSeq == Seq("R1"))
   }
 }

@@ -42,14 +42,48 @@ class TuneForSpec extends SparkSpec {
     assert(advisoryAfter("file:" + sf("sf0.01")) == bare)
   }
 
+  /** Runs `body` and puts the shared session's advisory back as it was. */
+  private def keepingAdvisory(body: => Unit): Unit = {
+    val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    val prior = spark.conf.getOption(key)
+    try body
+    finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   test("an unreachable remote URI degrades to the session-default advisory") {
-    // hdfs:-style URIs resolve through the same API; with no cluster behind
-    // the authority the lookup fails, bytes read 0, and tuneFor must leave
-    // the advisory exactly as it found it (the documented at-scale fallback)
-    spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "12345678")
-    SparkEntry.tuneFor(spark, "hdfs://graft-no-such-namenode:8020/data/corpus")
-    assert(spark.conf.get(
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes") == "12345678")
+    // a scheme no FileSystem is registered for fails inside the lookup
+    // itself, before any name resolution or connect retry; bytes read 0 and
+    // tuneFor must leave the advisory exactly as it found it (the
+    // documented at-scale fallback)
+    keepingAdvisory {
+      spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "12345678")
+      SparkEntry.tuneFor(spark, "graft-unregistered-scheme://namenode/data/corpus")
+      assert(spark.conf.get(
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes") == "12345678")
+    }
+  }
+
+  test("a failed size lookup is not memoized: the next call sizes the corpus") {
+    // the local filesystem under a scheme of its own, made to fail on demand:
+    // a transient storage fault must not pin the fallback for the JVM's life
+    val hadoop = spark.sparkContext.hadoopConfiguration
+    hadoop.set("fs.graftflaky.impl", classOf[FlakyLocalFs].getName)
+    hadoop.setBoolean("fs.graftflaky.impl.disable.cache", true)
+    val dir = "graftflaky:" + sf("sf0.001")
+    try keepingAdvisory {
+      spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "12345678")
+      FlakyLocalFs.failing = true
+      SparkEntry.tuneFor(spark, dir)
+      assert(spark.conf.get(
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes") == "12345678")
+      FlakyLocalFs.failing = false
+      // the same directory, now reachable: sized to the sub-floor advisory
+      assert(advisoryAfter(dir) == (1L << 20))
+    } finally {
+      FlakyLocalFs.failing = false
+      hadoop.unset("fs.graftflaky.impl")
+      hadoop.unset("fs.graftflaky.impl.disable.cache")
+    }
   }
 
   test("a cluster-scale corpus saturates the 64 MB cap") {
@@ -65,4 +99,19 @@ class TuneForSpec extends SparkSpec {
       ()
     }
   }
+}
+
+/** The local filesystem under the `graftflaky:` scheme; while `failing` is
+  * set, every status lookup throws as an unreachable store would.
+  */
+class FlakyLocalFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("graftflaky:///")
+  override def getScheme: String = "graftflaky"
+  override def getFileStatus(f: org.apache.hadoop.fs.Path): org.apache.hadoop.fs.FileStatus =
+    if (FlakyLocalFs.failing) throw new java.io.IOException(s"transient fault reading $f")
+    else super.getFileStatus(f)
+}
+
+object FlakyLocalFs {
+  @volatile var failing = false
 }
