@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Benchmark main: runs every registered query on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line.
@@ -15,27 +15,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      // sf1 under a tight heap can stall the in-process heartbeat thread
-      // behind full GCs; the default 10s interval × 60 misses then KILLS the
-      // executor mid-pass (observed: round-14 sf1 run died at minute 74).
-      // Local mode has no real liveness question — the "executor" is this
-      // JVM — so trade detection latency for GC tolerance.
-      .config("spark.executor.heartbeatInterval", "60s")
-      .config("spark.network.timeout", "1200s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel(sys.env.getOrElse("SPARK_GRAFT_LOGLVL", "WARN"))
-    SparkEntry.tune(spark)
-    // dev aid (the PlanProbe knob): quantify AQE's per-stage replanning share
-    // of the local-mode floor. The driver never sets it — official numbers
-    // are AQE-on, matching the configuration a cluster would run.
-    if (sys.env.contains("SPARK_GRAFT_NOAQE"))
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
+    val spark = GraftSession.local()
 
     // Every measurement starts from an empty cache: queries that persist() a
     // shared subplan internally keep their within-query reuse, but a later
@@ -48,7 +28,7 @@ object Bench {
       spark.catalog.clearCache()
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
       val t0 = System.nanoTime()
-      try fn catch { case _: Throwable => return -1.0 }
+      try fn catch { case NonFatal(_) => return -1.0 }
       (System.nanoTime() - t0) / 1e9
     }
 
@@ -72,9 +52,9 @@ object Bench {
     // sf0.1). Fewer samples can only RAISE the reported min, so a trimmed
     // run is a conservative measurement, never a flattering one; the mode
     // string records the count so the artifact states its own protocol.
-    // A trimmed run is still a NON-DEFAULT protocol, so like the other dev
-    // knobs it diverts to the .dev.json path below rather than overwriting
-    // the official record a total-only consumer might read without the mode.
+    // A trimmed run is still a NON-DEFAULT protocol, so like SPARK_GRAFT_ONLY
+    // it diverts to the .dev.json path below rather than overwriting the
+    // official record a total-only consumer might read without the mode.
     val nWarm = sys.env.get("SPARK_GRAFT_WARM_PASSES").map { v =>
       v.toIntOption.getOrElse(
         sys.error(s"SPARK_GRAFT_WARM_PASSES must be an integer, got '$v'"))
@@ -105,8 +85,8 @@ object Bench {
     // the scaling harness can verify the requested cores took effect.
     val scalingInfo = {
       val adv = try spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
-      catch { case _: Throwable => "" }
-      s""""master":"local[$cpus]","default_parallelism":${spark.sparkContext.defaultParallelism},"advisory_partition_bytes":"$adv""""
+      catch { case NonFatal(_) => "" }
+      s""""master":"${spark.sparkContext.master}","default_parallelism":${spark.sparkContext.defaultParallelism},"advisory_partition_bytes":"$adv""""
     }
     val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"cold_total_sec":$coldTotal,"warm_pass_totals_sec":$passTotals,"mode":"$mode",$scalingInfo,"sf":"$sfDir"}"""
     println(fullLine)
@@ -115,15 +95,14 @@ object Bench {
     // the line's head are lost. Persist the complete record to a file and
     // finish with a COMPACT line (totals + the slowest queries only) that
     // always fits whole inside a 2000-char tail.
-    // Dev runs with SPARK_GRAFT_ONLY / SPARK_GRAFT_NOAQE must not clobber the
-    // official full-registry record the compact line points at — divert them
-    // to a suffixed file.
-    val defaultProtocol =
-      only.isEmpty && !sys.env.contains("SPARK_GRAFT_NOAQE") && nWarm == 3
+    // Dev runs with SPARK_GRAFT_ONLY / SPARK_GRAFT_WARM_PASSES must not
+    // clobber the official full-registry record the compact line points at —
+    // divert them to a suffixed file.
+    val defaultProtocol = only.isEmpty && nWarm == 3
     val fullPath = if (defaultProtocol) "BENCH_FULL.json" else "BENCH_FULL.dev.json"
     try java.nio.file.Files.write(java.nio.file.Paths.get(fullPath),
       (fullLine + "\n").getBytes("UTF-8"))
-    catch { case _: Throwable => () }
+    catch { case NonFatal(_) => () }
     val failed = names.filter(n => warm(n) < 0)
     val slowest = names.filter(warm(_) >= 0).sortBy(-warm(_)).take(8)
       .map(n => "\"" + n + "\":" + warm(n)).mkString("{", ",", "}")
@@ -141,7 +120,7 @@ object Bench {
     if (defaultProtocol)
       try java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_SELF.json"),
         (compactLine + "\n").getBytes("UTF-8"))
-      catch { case _: Throwable => () }
+      catch { case NonFatal(_) => () }
     spark.stop()
   }
 }

@@ -1,10 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object EntrySmoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local()
     val df = SparkEntry.entry(spark)
     df.show(5, false)
     println("ENTRY_ROWS=" + df.count())

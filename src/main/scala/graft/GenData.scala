@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{Dataset, SaveMode}
 
 /** Deterministic synthetic-data generator producing the SAME schemas,
   * categorical domains and value ranges as the driver-provided testdata
@@ -105,14 +105,7 @@ object GenData {
         System.err.println("usage: graft.GenData <sf> <outDir>")
         sys.exit(2); throw new IllegalStateException
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     import spark.implicits._
 
     def n(base: Long, floor: Long = 1L): Long = math.max(floor, (base * sf).toLong)
@@ -125,7 +118,7 @@ object GenData {
     val nUsers = n(15000L)
     val nDocs = n(50000L, floor = 500L)
     val nEmb = n(20000L, floor = 500L)
-    val parts = cpus.toInt * 2
+    val parts = spark.sparkContext.defaultParallelism * 2
 
     val oDay0 = epochDay("1995-01-01")   // o_orderdate ∈ [1995-01-01, 2001-08-01]
     val oDays = (epochDay("2001-08-01") - oDay0 + 1).toInt

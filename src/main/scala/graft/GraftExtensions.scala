@@ -1,125 +1,76 @@
 package graft
 
-import graft.plans.{ArrayPairs, AsOfJoin, BloomAgg, BpeEncode, MightContain, MinhashSig, OsgbToWgs84, ShingleHashes, SimhashSig, SimhashSig64, SortedIntersectCount, TopKAgg, VectorCosine}
+import graft.plans.{AsOfJoin, BloomAgg, BpeEncode, MightContain, MinhashSig, OsgbToWgs84, ShingleHashes, SimhashSig, SimhashSig64, SortedIntersectCount, TopKAgg, VectorCosine}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.SparkSessionExtensionsProvider
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 
 /** Session extensions: registers the engine's native expressions so SQL and
-  * `expr(...)` can reach them. Install with
-  * `.config("spark.sql.extensions", "graft.GraftExtensions")` (done by
-  * Verify/Bench/test session builders; any consumer session can do the same).
+  * `expr(...)` can reach them. `GraftSession.local` is the way to get a
+  * session with them installed; any other session can add
+  * `.config("spark.sql.extensions", "graft.GraftExtensions")` to its builder.
   */
 class GraftExtensions extends SparkSessionExtensionsProvider {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new FunctionIdentifier("graft_cosine"),
-      new ExpressionInfo(classOf[VectorCosine].getName, "graft_cosine"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        VectorCosine(children.head, children(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_sorted_isect"),
-      new ExpressionInfo(classOf[SortedIntersectCount].getName, "graft_sorted_isect"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        SortedIntersectCount(children.head, children(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_topk"),
-      new ExpressionInfo(classOf[TopKAgg].getName, "graft_topk"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        TopKAgg(children.head, children(1), children(2))
-          .toAggregateExpression()))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_minhash"),
-      new ExpressionInfo(classOf[MinhashSig].getName, "graft_minhash"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        val perms = children(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-          case other => throw new IllegalArgumentException(
-            s"graft_minhash(hs, numPerms): numPerms must be an integer literal, got $other")
-        }
-        MinhashSig(children.head, perms)
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_bpe"),
-      new ExpressionInfo(classOf[BpeEncode].getName, "graft_bpe"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        val mergesExpr = children(1)
-        require(mergesExpr.foldable,
-          "graft_bpe(text, merges): merges must be a foldable array<string> literal")
-        val merges = mergesExpr.eval() match {
-          case a: org.apache.spark.sql.catalyst.util.ArrayData =>
-            (0 until a.numElements()).map(i => a.getUTF8String(i).toString)
-          case other => throw new IllegalArgumentException(
-            s"graft_bpe: merges must evaluate to an array, got $other")
-        }
-        BpeEncode(children.head, merges)
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_shingle_hashes"),
-      new ExpressionInfo(classOf[ShingleHashes].getName, "graft_shingle_hashes"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        val n = children(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-          case other => throw new IllegalArgumentException(
-            s"graft_shingle_hashes(tokens, n): n must be an integer literal, got $other")
-        }
-        ShingleHashes(children.head, n)
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_pairs"),
-      new ExpressionInfo(classOf[ArrayPairs].getName, "graft_pairs"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        val diag = if (children.size < 2) false else children(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(b: Boolean, _) => b
-          case other => throw new IllegalArgumentException(
-            s"graft_pairs(arr, includeDiag): includeDiag must be a boolean literal, got $other")
-        }
-        ArrayPairs(children.head, diag)
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_simhash"),
-      new ExpressionInfo(classOf[SimhashSig].getName, "graft_simhash"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        SimhashSig(children.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_simhash64"),
-      new ExpressionInfo(classOf[SimhashSig64].getName, "graft_simhash64"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        SimhashSig64(children.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_bloom"),
-      new ExpressionInfo(classOf[BloomAgg].getName, "graft_bloom"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        BloomAgg(children.head, children(1), children(2))
-          .toAggregateExpression()))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_might_contain"),
-      new ExpressionInfo(classOf[MightContain].getName, "graft_might_contain"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        MightContain(children.head, children(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_morton"),
-      new ExpressionInfo("graft.functions.ZOrder", "graft_morton"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        // the ZOrder.spread/morton bit math as a raw catalyst tree (the
-        // Column wrapper types are not analyzable from a function builder);
-        // codegen's subexpression elimination collapses the duplicated
-        // subtrees the magic-number construction repeats
-        import org.apache.spark.sql.catalyst.expressions.{BitwiseAnd, BitwiseOr, Literal, ShiftLeft}
-        import org.apache.spark.sql.catalyst.expressions.{Expression => E}
-        def spread(v: E): E = {
-          def step(a: E, s: Int, mask: Long): E =
-            BitwiseAnd(BitwiseOr(a, ShiftLeft(a, Literal(s))), Literal(mask))
-          step(step(step(step(v, 8, 16711935L), 4, 252645135L), 2, 858993459L), 1, 1431655765L)
-        }
-        BitwiseOr(spread(children.head), ShiftLeft(spread(children(1)), Literal(1)))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_osgb"),
-      new ExpressionInfo(classOf[OsgbToWgs84].getName, "graft_osgb"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        OsgbToWgs84(children.head, children(1))))
+    // registers `name` with a builder that rejects a wrong argument count by
+    // naming the signature, before `build` indexes into the children
+    def fn(name: String, className: String, arity: Int)(build: Seq[Expression] => Expression): Unit =
+      ext.injectFunction((new FunctionIdentifier(name), new ExpressionInfo(className, name),
+        (children: Seq[Expression]) => {
+          if (children.size != arity) {
+            val params = ('a' until ('a' + arity).toChar).mkString(", ")
+            throw new IllegalArgumentException(
+              s"$name($params) takes $arity argument${if (arity == 1) "" else "s"}, got ${children.size}")
+          }
+          build(children)
+        }))
+    def intLiteral(e: Expression, what: String): Int = e match {
+      case Literal(v: Int, _) => v
+      case other => throw new IllegalArgumentException(
+        s"$what must be an integer literal, got $other")
+    }
+
+    fn("graft_cosine", classOf[VectorCosine].getName, 2)(c => VectorCosine(c(0), c(1)))
+    fn("graft_sorted_isect", classOf[SortedIntersectCount].getName, 2)(c =>
+      SortedIntersectCount(c(0), c(1)))
+    fn("graft_topk", classOf[TopKAgg].getName, 3)(c =>
+      TopKAgg(c(0), c(1), c(2)).toAggregateExpression())
+    fn("graft_minhash", classOf[MinhashSig].getName, 2)(c =>
+      MinhashSig(c(0), intLiteral(c(1), "graft_minhash(hs, numPerms): numPerms")))
+    fn("graft_bpe", classOf[BpeEncode].getName, 2) { c =>
+      val mergesExpr = c(1)
+      require(mergesExpr.foldable,
+        "graft_bpe(text, merges): merges must be a foldable array<string> literal")
+      val merges = mergesExpr.eval() match {
+        case a: org.apache.spark.sql.catalyst.util.ArrayData =>
+          (0 until a.numElements()).map(i => a.getUTF8String(i).toString)
+        case other => throw new IllegalArgumentException(
+          s"graft_bpe: merges must evaluate to an array, got $other")
+      }
+      BpeEncode(c(0), merges)
+    }
+    fn("graft_shingle_hashes", classOf[ShingleHashes].getName, 2)(c =>
+      ShingleHashes(c(0), intLiteral(c(1), "graft_shingle_hashes(tokens, n): n")))
+    fn("graft_simhash", classOf[SimhashSig].getName, 1)(c => SimhashSig(c(0)))
+    fn("graft_simhash64", classOf[SimhashSig64].getName, 1)(c => SimhashSig64(c(0)))
+    fn("graft_bloom", classOf[BloomAgg].getName, 3)(c =>
+      BloomAgg(c(0), c(1), c(2)).toAggregateExpression())
+    fn("graft_might_contain", classOf[MightContain].getName, 2)(c => MightContain(c(0), c(1)))
+    fn("graft_morton", "graft.functions.ZOrder", 2) { c =>
+      // the ZOrder.spread/morton bit math as a raw catalyst tree (the
+      // Column wrapper types are not analyzable from a function builder);
+      // codegen's subexpression elimination collapses the duplicated
+      // subtrees the magic-number construction repeats
+      import org.apache.spark.sql.catalyst.expressions.{BitwiseAnd, BitwiseOr, ShiftLeft}
+      def spread(v: Expression): Expression = {
+        def step(a: Expression, s: Int, mask: Long): Expression =
+          BitwiseAnd(BitwiseOr(a, ShiftLeft(a, Literal(s))), Literal(mask))
+        step(step(step(step(v, 8, 16711935L), 4, 252645135L), 2, 858993459L), 1, 1431655765L)
+      }
+      BitwiseOr(spread(c(0)), ShiftLeft(spread(c(1)), Literal(1)))
+    }
+    fn("graft_osgb", classOf[OsgbToWgs84].getName, 2)(c => OsgbToWgs84(c(0), c(1)))
     // whole-operator tier: native as-of join (logical node + pushdown rule +
     // strategy + sort-merge physical operator)
     ext.injectPlannerStrategy(_ => AsOfJoin.AsOfJoinStrategy)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Dev tool: dump `explain("formatted")` for every registered query to a dir
@@ -9,11 +8,7 @@ import java.nio.file.{Files, Paths}
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val out = if (args.nonEmpty) args(0) else "/tmp/plans"
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local()
     new java.io.File(out).mkdirs()
     val d = "/root/testdata/sf0.01"
     SparkEntry.queries.foreach { case (name, fn) =>

@@ -43,13 +43,11 @@ object SparkEntry {
     // parallelism for small-but-dense inputs; large fact files are
     // unaffected (their bytes/parallelism term already dominates), and the
     // extra task-launch cost on genuinely tiny files is microseconds.
-    // (SPARK_GRAFT_OPENCOST is a dev A/B knob; the driver never sets it)
-    spark.conf.set("spark.sql.files.openCostInBytes",
-      sys.env.getOrElse("SPARK_GRAFT_OPENCOST", (128 * 1024).toString))
+    spark.conf.set("spark.sql.files.openCostInBytes", (128 * 1024).toString)
     // AQE's default coalescing is parallelism-first: it splits small
     // shuffles down to minPartitionSize to keep every core busy, which on
     // sub-second inputs just multiplies task-scheduling floor (measured
-    // FloorKnobs A/B: ~25% off the sub-floor query family with pfirst=false,
+    // A/B: ~25% off the sub-floor query family with pfirst=false,
     // trivial shuffle 280→223 ms). Size-first coalescing to the 64 MB
     // advisory is also the correct 100 TB posture — a wave of
     // advisory-sized tasks beats core-count-many slivers at any scale.

@@ -17,7 +17,7 @@ object Tables {
   /** Load with a per-(session, path, content-stamp) RELATION memo. A bare
     * `spark.read.parquet` re-infers the schema (a footer-read Spark job)
     * and re-lists the directory on every call — 100–700 ms per query in
-    * local mode (measured, [[FloorProbe]]) and a driver-side footer fetch
+    * local mode (measured) and a driver-side footer fetch
     * per query at cluster scale. A real deployment resolves tables from a
     * catalog that stores schema + file index; this memo is that catalog
     * seam. The stamp (top-level dir mtime ^ length) invalidates the entry

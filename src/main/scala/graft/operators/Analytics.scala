@@ -697,7 +697,7 @@ object Analytics {
           col("n_regionkey") === col("r_regionkey"))
         .select(col("c_custkey"), col("c_nationkey"), col("n_name"))
       // NOTE (round 16): the q_tpch_q3 broadcast-below-the-exchange move was
-      // A/B'd here and measured WORSE (Scratch, sf1 min-of-3: 3.05 s below
+      // A/B'd here and measured WORSE (same-session A/B, sf1 min-of-3: 3.05 s below
       // vs 1.95 s above) — unlike Q3/Q7, lineitem carries no filter of its
       // own, so the join's cost is the full-l exchange either way and the
       // early dim probe only adds a build stage ahead of it. Kept above.

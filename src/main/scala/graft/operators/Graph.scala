@@ -620,8 +620,8 @@ object Graph {
       // ≤40 keys the report references: the support explode still scans the
       // baskets once, but its aggregate shuffles ~40 keys instead of every
       // distinct item, and the two item-table broadcast builds (200k rows
-      // each at sf1) shrink to a 40-row table. Same-session A/B (Scratch,
-      // min-of-3): 11.2 s full-item-agg vs 4.5 s filtered — the broadcast
+      // each at sf1) shrink to a 40-row table. Same-session A/B
+      // (min-of-3): 11.2 s full-item-agg vs 4.5 s filtered — the broadcast
       // builds, not the aggregate, were the surprise cost. Report values
       // are identical: supports are exact counts either way.
       val pairs = baskets

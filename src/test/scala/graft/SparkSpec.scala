@@ -11,17 +11,17 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = SparkEntry.tune(
-    SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      // a Janino compile failure in generated code must FAIL the suite, not
-      // silently fall back to the interpreted path — otherwise a broken
-      // doGenCode/doConsume ships while every plan-string assertion stays
-      // green against the fallback execution
-      .config("spark.sql.codegen.fallback", "false")
-      .appName("graft-test")
-      .getOrCreate())
+  /** Fixed, not host-sized, so partition-count assertions (the GeoJSON
+    * packing layout, shuffle-width gates) mean the same on every machine. */
+  val cpus = 4
+
+  lazy val session: SparkSession = {
+    val s = GraftSession.local(cpus)
+    // a Janino compile failure in generated code must FAIL the suite, not
+    // silently fall back to the interpreted path — otherwise a broken
+    // doGenCode/doConsume ships while every plan-string assertion stays
+    // green against the fallback execution
+    s.conf.set("spark.sql.codegen.fallback", "false")
+    s
+  }
 }

@@ -10,10 +10,10 @@ rc=$?
 echo "[pair01] spark bench done rc=$rc $(date -u +%H:%M:%S)"
 # Guard the snapshot on success: without it a failed sbt run would copy the
 # PREVIOUS run's BENCH_FULL.json under this run's name and look fresh.
-# Non-default protocols (WARM_PASSES/ONLY/NOAQE) write BENCH_FULL.dev.json.
+# Non-default protocols (WARM_PASSES/ONLY) write BENCH_FULL.dev.json.
 src=BENCH_FULL.json
 { [ -n "${SPARK_GRAFT_WARM_PASSES:-}" ] && [ "${SPARK_GRAFT_WARM_PASSES}" != 3 ]; } \
-  || [ -n "${SPARK_GRAFT_ONLY:-}" ] || [ -n "${SPARK_GRAFT_NOAQE:-}" ] \
+  || [ -n "${SPARK_GRAFT_ONLY:-}" ] \
   && src=BENCH_FULL.dev.json
 [ $rc -eq 0 ] && cp "$src" /tmp/bench_sf01_spark.json
 echo "[pair01] duckdb default start $(date -u +%H:%M:%S)"
