@@ -6,9 +6,12 @@ import org.apache.spark.sql.SparkSessionExtensionsProvider
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 
-/** Session extensions: registers the engine's native expressions so SQL and
-  * `expr(...)` can reach them. `GraftSession.local` is the way to get a
-  * session with them installed; any other session can add
+/** Session extensions: registers the engine's native expressions under their
+  * `graft_*` names so SQL and `expr(...)` can reach them, and installs the
+  * native as-of join's rules and strategy. Operators build the expressions
+  * directly (functions/Native), so of the registered queries only
+  * `q_asof_native` needs the extensions. `GraftSession.local` is the way to
+  * get a session with them installed; any other session can add
   * `.config("spark.sql.extensions", "graft.GraftExtensions")` to its builder.
   */
 class GraftExtensions extends SparkSessionExtensionsProvider {

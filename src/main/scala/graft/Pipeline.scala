@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.{Osgb, OsGrid, Wkt}
+import graft.functions.{Native, OsGrid, Wkt}
 import graft.sinks.Sinks
 import graft.sources.GeoJson
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -14,7 +14,8 @@ import org.apache.spark.sql.functions._
   * This is the "a user of the reference could switch" surface: the same
   * inputs/outputs as `process_cycle_networks.py` end to end, but every step is
   * a declarative Spark plan (one scan, zero driver-side loops). Reprojection
-  * runs the same shared-SQL transform the oracle uses (functions/Osgb.scala).
+  * is the native `graft_osgb` expression, which runs the same double-op
+  * sequence as the shared-SQL transform the oracle uses (functions/Osgb.scala).
   */
 object Pipeline {
 
@@ -22,17 +23,10 @@ object Pipeline {
     * route_length_m, source_file, start easting/northing, WGS84 lat/lon and
     * the precision-10 OS grid reference of the route start.
     */
-  def processRoutes(spark: SparkSession, geojsonPath: String): DataFrame = {
-    val enriched = GeoJson.ingest(spark, geojsonPath)
+  def processRoutes(spark: SparkSession, geojsonPath: String): DataFrame =
+    withLatLonGridRef(GeoJson.ingest(spark, geojsonPath)
       .withColumn("easting", col("coordinates")(0)(0).cast("double"))
-      .withColumn("northing", col("coordinates")(0)(1).cast("double"))
-    enriched.createOrReplaceTempView("graft_pipeline_routes")
-    val keyCols = enriched.columns.filterNot(Seq("easting", "northing").contains).toSeq
-    val reprojected = spark.sql(
-      Osgb.reprojectSql("graft_pipeline_routes", keyCols, 6))
-    reprojected.withColumn("os_gridref",
-      OsGrid.gridRef(col("easting"), col("northing"), 10))
-  }
+      .withColumn("northing", col("coordinates")(0)(1).cast("double")))
 
   /** Full run: process + write both file sinks, mirroring
     * process_cycle_networks.py's geojson/csv output switch (both here).
@@ -51,18 +45,22 @@ object Pipeline {
 
   /** The same enrichment through the native surface: DSv2 connector read
     * (multi-part aware, pruned at the reader), nested-fold multi-part length,
-    * fused `graft_osgb` reprojection expression, grid reference. Requires the
-    * GraftExtensions session config; produces the same lat/lon/gridref values
-    * as [[processRoutes]] (PipelineSpec asserts the equivalence).
+    * then the same reprojection and grid reference as [[processRoutes]]
+    * (PipelineSpec asserts the equivalence).
     */
   def processRoutesNative(spark: SparkSession, geojsonPath: String): DataFrame = {
-    require(spark.catalog.functionExists("graft_osgb"),
-      "processRoutesNative needs spark.sql.extensions=graft.GraftExtensions")
     val feats = spark.read.format("geojson").load(geojsonPath)
-    val ll = expr("graft_osgb(easting, northing)")
-    sources.GeoJson.multiPartLength(feats)
+    withLatLonGridRef(GeoJson.multiPartLength(feats)
       .withColumn("easting", element_at(element_at(element_at(col("parts"), 1), 1), 1).cast("double"))
-      .withColumn("northing", element_at(element_at(element_at(col("parts"), 1), 1), 2).cast("double"))
+      .withColumn("northing", element_at(element_at(element_at(col("parts"), 1), 1), 2).cast("double")))
+  }
+
+  /** Appends `lat`/`lon` (the `graft_osgb` reprojection of easting/northing,
+    * rounded to 6 decimals, ~0.1 m) and the precision-10 `os_gridref`.
+    */
+  private def withLatLonGridRef(routes: DataFrame): DataFrame = {
+    val ll = Native.osgb(col("easting"), col("northing"))
+    routes
       .withColumn("lat", round(element_at(ll, 1), 6))
       .withColumn("lon", round(element_at(ll, 2), 6))
       .withColumn("os_gridref", OsGrid.gridRef(col("easting"), col("northing"), 10))

@@ -22,9 +22,6 @@ object SparkEntry {
     // events.ts is parquet TIMESTAMP(NANOS), which Spark 4 refuses by default;
     // read it as epoch-nanos BIGINT and convert explicitly where needed.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // the reprojection query is a ~50-layer nested projection chain (see
-    // functions/Osgb.scala); the default 100 analyzer iterations are too few
-    spark.conf.set("spark.sql.analyzer.maxIterations", "1000")
     // cached (persist-marked) plan fragments — the iterative graph/CC loops
     // lean on them for lazy lineage truncation — must still get AQE's
     // partition coalescing when materialized: the default pins a cached

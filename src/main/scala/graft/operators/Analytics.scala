@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Q, Tables}
+import graft.functions.Native
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -171,28 +172,18 @@ object Analytics {
 
   /** Top-k per key via the custom partial-aggregable heap aggregate
     * (plans/TopKAgg.scala) — same answer as `q_window_topk` but the shuffle
-    * carries ≤ k rows per key per partition instead of every row. Falls back
-    * to the window form when the GraftExtensions session extension is absent.
+    * carries ≤ k rows per key per partition instead of every row.
     */
   val topKAgg = Q(
     "q_topk_agg",
-    (s, d) => {
-      if (s.catalog.functionExists("graft_topk"))
-        Tables.orders(s, d)
-          .groupBy("o_custkey")
-          .agg(expr("graft_topk(o_totalprice, o_orderkey, 3)").as("top"))
-          .select(col("o_custkey"), posexplode(col("top")).as(Seq("pos", "t")))
-          .select(col("o_custkey"), col("t.id").as("o_orderkey"),
-            col("t.score").as("o_totalprice"), (col("pos") + 1L).as("rank"))
-          .orderBy("o_custkey", "rank")
-      else
-        Tables.orders(s, d)
-          .withColumn("rank", row_number().over(
-            Window.partitionBy("o_custkey").orderBy(col("o_totalprice").desc, col("o_orderkey"))).cast("long"))
-          .filter(col("rank") <= 3)
-          .select("o_custkey", "o_orderkey", "o_totalprice", "rank")
-          .orderBy("o_custkey", "rank")
-    },
+    (s, d) =>
+      Tables.orders(s, d)
+        .groupBy("o_custkey")
+        .agg(Native.topk(col("o_totalprice"), col("o_orderkey"), 3).as("top"))
+        .select(col("o_custkey"), posexplode(col("top")).as(Seq("pos", "t")))
+        .select(col("o_custkey"), col("t.id").as("o_orderkey"),
+          col("t.score").as("o_totalprice"), (col("pos") + 1L).as("rank"))
+        .orderBy("o_custkey", "rank"),
     """SELECT o_custkey, o_orderkey, o_totalprice, CAST(rank AS BIGINT) AS rank FROM (
       |  SELECT o_custkey, o_orderkey, o_totalprice,
       |         row_number() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey) AS rank

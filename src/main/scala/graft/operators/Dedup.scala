@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{Q, Tables, Warehouse}
-import graft.functions.TextFns
+import graft.functions.{Native, TextFns}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftglue.Bridge
@@ -31,57 +31,22 @@ object Dedup {
       |FROM documents GROUP BY 1 ORDER BY keep_id""".stripMargin
   )
 
-  /** Permutation coefficients aj (odd, 29-bit) / bj (28-bit), derived from md5
-    * exactly as the oracle derives them in SQL
-    * (`('0x'||substr(md5('a'||j),1,7))::BIGINT`).
-    */
-  private def permCoeffs(numPerms: Int): Seq[(Long, Long)] =
-    (0 until numPerms).map(j =>
-      (2L * TextFns.hashN(s"a$j", 7) + 1L, TextFns.hashN(s"b$j", 7)))
-
   /** MinHash signatures for word-`n`-gram shingles:
     * (doc_id, hs: array<long> distinct shingle hashes, sig: array<long>).
     *
-    * One shuffle (group shingle hashes per doc) — the md5 hashing runs over
-    * exploded rows inside whole-stage codegen (a per-doc HOF rewrite measures
-    * slower; see [[TextFns.shingles]]). Each permutation's minimum is an
-    * `array_min(transform(...))` fold — NOT a numPerms-way row fanout, which
-    * would shuffle |shingles|·numPerms rows. Same values either way (min is
-    * order-invariant), so the oracle is unaffected. The hash set rides along
-    * so the verify stage never has to recompute shingles.
+    * No shuffle: `graft_shingle_hashes` builds each doc's distinct hash set
+    * row-locally, and `graft_minhash` folds every permutation's minimum over
+    * it in one codegen'd loop — NOT a numPerms-way row fanout. The values are
+    * the oracle's explode/DISTINCT/min form (MinhashSigSpec). The empty-hs
+    * filter mirrors the explode, where a doc with < n tokens never produces a
+    * row. The hash set rides along so the verify stage never has to
+    * recompute shingles.
     */
-  def minhashSignatures(documents: DataFrame, n: Int, numPerms: Int): DataFrame = {
-    // native fused-loop signature expression when GraftExtensions is
-    // installed (one codegen'd node); bit-identical HOF fallback otherwise
-    // (numPerms array_min folds — same values, interpreted lambdas)
-    val catalog = documents.sparkSession.catalog
-    val sigCol =
-      if (catalog.functionExists("graft_minhash"))
-        expr(s"graft_minhash(hs, $numPerms)")
-      else {
-        val coeffs = permCoeffs(numPerms)
-        array(coeffs.map { case (a, b) =>
-          array_min(transform(col("hs"), h => (lit(a) * h + lit(b)) % P))
-        }: _*)
-      }
-    // shuffle-free hash-set path: the whole (doc_id, hs, sig) relation is one
-    // map pass when the native shingle-hash expression is available — the
-    // column pipeline below shuffles every shingle row twice (DISTINCT + the
-    // per-doc set aggregate) for the same per-doc-local result. The empty-hs
-    // filter mirrors the explode pipeline, where a doc with < n tokens never
-    // produces a row.
-    val hsRel =
-      if (catalog.functionExists("graft_shingle_hashes"))
-        documents
-          .select(col("doc_id"), expr(s"graft_shingle_hashes(split(text, ' '), $n)").as("hs"))
-          .filter(size(col("hs")) > 0)
-      else
-        TextFns.shingles(documents, n)
-          .select(col("doc_id"), TextFns.hash32(col("sh")).as("h"))
-          .groupBy("doc_id")
-          .agg(collect_set(col("h")).as("hs"))
-    hsRel.select(col("doc_id"), col("hs"), sigCol.as("sig"))
-  }
+  def minhashSignatures(documents: DataFrame, n: Int, numPerms: Int): DataFrame =
+    documents
+      .select(col("doc_id"), Native.shingleHashes(split(col("text"), " "), n).as("hs"))
+      .filter(size(col("hs")) > 0)
+      .select(col("doc_id"), col("hs"), Native.minhash(col("hs"), numPerms).as("sig"))
 
   /** LSH banding: (doc_id, band, bkey) where bkey is the md5 of the band's
     * '_'-joined signature slice. Shuffle key for candidate generation.
@@ -208,27 +173,23 @@ object Dedup {
   /** SimHash DataFrame (doc_id, simhash): 32-bit, sign of token-frequency
     * weighted bit sums.
     *
-    * ONE hash aggregate with 32 sum columns — not a 32-way bit-position
-    * explode (which multiplies the shuffle by 32 and adds a second aggregate
-    * stage), and not a per-doc HOF fold (interpreted, outside codegen —
-    * measured slower; see [[TextFns.shingles]]). The per-bit sums are exact
-    * integers (count × ±1), identical to the exploded form at any
-    * parallelism, so the oracle (which still uses the unnest(range(32))
-    * formulation) is unaffected.
+    * One native per-doc expression (`graft_simhash`): zero shuffles, where
+    * the aggregate form [[simhashAggDf]] spends two wide exchanges on
+    * per-doc arithmetic. The per-bit sums are exact integers (count × ±1),
+    * so the values equal the aggregate form and the oracle's
+    * unnest(range(32)) formulation bit-for-bit (SimhashSigSpec).
     */
   def simhashDf(documents: DataFrame): DataFrame =
-    // native per-doc expression when GraftExtensions is installed: zero
-    // shuffles (the aggregate form spends two wide exchanges on per-doc
-    // arithmetic); bit-identical values — SimhashSigSpec enforces it
-    if (documents.sparkSession.catalog.functionExists("graft_simhash"))
-      // null-text docs produce no token rows in the aggregate form and so
-      // no output row — mirror that exactly (the expression alone would
-      // emit a null-simhash row)
-      documents.filter(col("text").isNotNull)
-        .select(col("doc_id"), expr("graft_simhash(split(text, ' '))").as("simhash"))
-    else simhashAggDf(documents)
+    // null-text docs produce no token rows in the aggregate form and so no
+    // output row — mirror that exactly (the expression alone would emit a
+    // null-simhash row)
+    documents.filter(col("text").isNotNull)
+      .select(col("doc_id"), Native.simhash(split(col("text"), " ")).as("simhash"))
 
-  /** The built-in-only twin of [[simhashDf]] (and its value contract). */
+  /** The built-in-only twin of [[simhashDf]] and its value contract
+    * (SimhashSigSpec's reference): ONE hash aggregate with 32 exact-integer
+    * sum columns, never a 32-way bit-position explode.
+    */
   def simhashAggDf(documents: DataFrame): DataFrame = {
     val tc = documents
       .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
@@ -296,11 +257,9 @@ object Dedup {
     * family at zero extra hashing (SimhashSigSpec pins native == aggregate).
     */
   def simhash64Df(documents: DataFrame): DataFrame =
-    if (documents.sparkSession.catalog.functionExists("graft_simhash64"))
-      documents.filter(col("text").isNotNull)
-        .select(col("doc_id"), expr("graft_simhash64(split(text, ' '))").as("s64"))
-        .select(col("doc_id"), col("s64").getItem(0).as("lo"), col("s64").getItem(1).as("hi"))
-    else simhash64AggDf(documents)
+    documents.filter(col("text").isNotNull)
+      .select(col("doc_id"), Native.simhash64(split(col("text"), " ")).as("s64"))
+      .select(col("doc_id"), col("s64").getItem(0).as("lo"), col("s64").getItem(1).as("hi"))
 
   /** The built-in-only twin of [[simhash64Df]]: one hash aggregate with 64
     * exact-integer sum columns (32 per half) — same single-aggregate shape as
@@ -417,15 +376,10 @@ object Dedup {
           "transform(sequence(0, size(t) - 2), i -> concat_ws(' ', t[i], t[i + 1]))"))).as("sh"))
       // doc-list relation is one row per qualifying shingle (small) and feeds
       // both the pair generator and the per-doc counts — localCheckpoint
-      // materializes it once and leaves AQE free above it
-      // bounded heap per partial buffer with the extensions installed; a
-      // session without GraftExtensions degrades to collect_set (same rows —
-      // pair generation is order-invariant — at unbounded-buffer cost)
-      val docList =
-        if (s.catalog.functionExists("graft_topk"))
-          expr(s"transform(graft_topk(cast(doc_id as double), doc_id, ${cap + 1})," +
-            " x -> x.id)")
-        else expr("collect_set(doc_id)")
+      // materializes it once and leaves AQE free above it; the doc list is a
+      // bounded heap per partial buffer
+      val docList = transform(
+        Native.topk(col("doc_id").cast("double"), col("doc_id"), cap + 1), x => x("id"))
       val capped = sh
         .groupBy("sh")
         .agg(docList.as("docs"))
@@ -486,19 +440,12 @@ object Dedup {
     * (doc_id, text) relation; see the Q's doc for the plan rationale.
     */
   def duplicatedShingleCoverage(documents: DataFrame): DataFrame = {
-    val s = documents.sparkSession
-    val hashed =
-      if (s.catalog.functionExists("graft_shingle_hashes"))
-        documents.select(col("doc_id"),
-          explode(expr("graft_shingle_hashes(split(text, ' '), 2)")).as("h"))
-      else
-        // dropDuplicates matches the native path (graft_shingle_hashes dedups
-        // hashes per doc) and the DISTINCT-on-hash oracle: two distinct
-        // shingles in one doc colliding on the 32-bit hash must count once.
-        TextFns.shingles(documents, 2)
-          .select(col("doc_id"), TextFns.hash32(col("sh")).as("h"))
-          .dropDuplicates("doc_id", "h")
-    val sh = hashed.repartition(col("h")).localCheckpoint()
+    // graft_shingle_hashes dedups hashes per doc, like the DISTINCT-on-hash
+    // oracle: two distinct shingles in one doc colliding on the 32-bit hash
+    // count once
+    val sh = documents
+      .select(col("doc_id"), explode(Native.shingleHashes(split(col("text"), " "), 2)).as("h"))
+      .repartition(col("h")).localCheckpoint()
     val df = sh.groupBy(col("h")).agg(count(lit(1)).as("df"))
     sh.join(df, Seq("h"))
       .groupBy(col("doc_id"))
@@ -545,21 +492,11 @@ object Dedup {
       // BEFORE the aggregate (mostly-unique keys per split make the partial
       // heap a full corpus probe buying no shuffle reduction). sf1: 7.2 s →
       // the pair fan-out and verify are unchanged.
-      val sh = (if (s.catalog.functionExists("graft_shingle_hashes"))
-        Tables.documentsSpread(s, d).select(col("doc_id"),
-          explode(expr("graft_shingle_hashes(split(text, ' '), 2)")).as("h"))
-      else
-        // per-doc hash dedup, matching the native path and the oracle's
-        // DISTINCT doc_id, h (32-bit collisions inside one doc count once)
-        TextFns.shingles(Tables.documentsSpread(s, d), 2)
-          .select(col("doc_id"), TextFns.hash32(col("sh")).as("h"))
-          .dropDuplicates("doc_id", "h"))
+      val sh = Tables.documentsSpread(s, d)
+        .select(col("doc_id"), explode(Native.shingleHashes(split(col("text"), " "), 2)).as("h"))
         .repartition(col("h"))
-      val docList =
-        if (s.catalog.functionExists("graft_topk"))
-          expr(s"transform(graft_topk(cast(doc_id as double), doc_id, ${cap + 1})," +
-            " x -> x.id)")
-        else expr("collect_set(doc_id)")
+      val docList = transform(
+        Native.topk(col("doc_id").cast("double"), col("doc_id"), cap + 1), x => x("id"))
       val capped = sh
         .groupBy("h")
         .agg(docList.as("docs"))
@@ -761,14 +698,9 @@ object Dedup {
                             n: Int = 2, minShared: Long = 5L,
                             bloomCapacity: Option[Int] = None,
                             maxDf: Int = 100): DataFrame = {
-    val s = train.sparkSession
     def hashes(df: DataFrame, idAs: String) =
-      if (s.catalog.functionExists("graft_shingle_hashes"))
-        df.select(col("doc_id").as(idAs),
-          explode(expr(s"graft_shingle_hashes(split(text, ' '), $n)")).as("h"))
-      else
-        TextFns.shingles(df, n)
-          .select(col("doc_id").as(idAs), TextFns.hash32(col("sh")).as("h"))
+      df.select(col("doc_id").as(idAs),
+        explode(Native.shingleHashes(split(col("text"), " "), n)).as("h"))
     val evAll = hashes(eval, "eval_doc")
     val trAll = hashes(train, "train_doc")
     val rare = trAll.select(col("h"))
@@ -778,7 +710,7 @@ object Dedup {
     val ev = evAll.join(rare, Seq("h"), "left_semi")
     val tr0 = trAll.join(rare, Seq("h"), "left_semi")
     val tr = bloomCapacity match {
-      case Some(cap) if s.catalog.functionExists("graft_bloom") =>
+      case Some(cap) =>
         // the filter is built DISTRIBUTED (mergeable bitset-OR aggregate) and
         // reaches the probe as an uncorrelated SCALAR SUBQUERY — evaluated
         // once per execution and fed in as a constant, so the probe decodes
@@ -787,11 +719,9 @@ object Dedup {
         // stays LAZY (no job until an action). Feeding the bytes through a
         // join column instead would copy + decode the filter PER ROW (row
         // accessors copy binary values) — measured as a 100× slowdown.
-        val bloom = Bridge.scalarSubquery(
-          ev.agg(expr(s"graft_bloom(h, $cap, CAST(0.01 AS DOUBLE))").as("bf")))
-        tr0.filter(Bridge.columnOf(graft.plans.MightContain(
-          bloom, org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute("h"))))
-      case _ => tr0
+        val bloom = Bridge.scalarSubquery(ev.agg(Native.bloom(col("h"), cap, 0.01).as("bf")))
+        tr0.filter(Native.mightContain(Bridge.columnOf(bloom), col("h")))
+      case None => tr0
     }
     tr.join(ev, Seq("h"))
       .groupBy("train_doc", "eval_doc").agg(count(lit(1)).as("shared"))
@@ -1133,18 +1063,11 @@ object Dedup {
     * unit-testable (NoveltySpec).
     */
   def ngramNoveltyReport(documents: DataFrame, n: Int = 3): DataFrame = {
-    val s = documents.sparkSession
-    val hashed =
-      if (s.catalog.functionExists("graft_shingle_hashes"))
-        documents.select(col("doc_id"),
-          explode(expr(s"graft_shingle_hashes(split(text, ' '), $n)")).as("h"))
-      else // extension-less session: same hashes via the column pipeline;
-        // dropDuplicates matches the native per-doc hash dedup and the
-        // oracle's DISTINCT doc_id, h (in-doc 32-bit collisions count once)
-        TextFns.shingles(documents, n)
-          .select(col("doc_id"), TextFns.hash32(col("sh")).as("h"))
-          .dropDuplicates("doc_id", "h")
-    val sh = hashed.repartition(col("h")).localCheckpoint()
+    // per-doc hash dedup matches the oracle's DISTINCT doc_id, h (in-doc
+    // 32-bit collisions count once)
+    val sh = documents
+      .select(col("doc_id"), explode(Native.shingleHashes(split(col("text"), " "), n)).as("h"))
+      .repartition(col("h")).localCheckpoint()
     val first = sh.groupBy(col("h")).agg(min(col("doc_id")).as("first_doc"))
     sh.join(first, Seq("h"))
       .groupBy(col("doc_id"))

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Q, Tables, Warehouse}
+import graft.functions.Native
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -214,13 +215,10 @@ object Graph {
     // intersection is the codegen'd two-pointer merge below instead of a
     // hash-set + output-array allocation per row
     val adj = e.groupBy(col("u")).agg(sort_array(collect_list(col("v"))).as("ns"))
-    // native allocation-free sorted intersect when the extensions are
-    // installed; array_intersect fallback is value-identical on the sorted
-    // distinct lists (SortedIntersectSpec pins the equivalence)
-    val isect =
-      if (edges.sparkSession.catalog.functionExists("graft_sorted_isect"))
-        expr("graft_sorted_isect(nu, nv)")
-      else size(array_intersect(col("nu"), col("nv")))
+    // native allocation-free sorted intersect: value-identical to
+    // size(array_intersect(nu, nv)) on the sorted distinct lists
+    // (SortedIntersectSpec pins the equivalence)
+    val isect = Native.sortedIsect(col("nu"), col("nv"))
     // count each triangle at its lowest oriented edge (u, v): attach N⁺(u)
     // and N⁺(v) by two equi-joins against the adjacency and intersect
     // row-locally. The exploded regenerate-edges-from-adj alternative (carry

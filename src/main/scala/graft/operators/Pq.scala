@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Q, Tables}
+import graft.functions.Native
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
@@ -194,28 +195,18 @@ object Pq {
   /** Exact re-rank of the top-`rerank` ADC candidates to final top-`k`,
     * scored with the SAME rounded cosine + tie rules as cosineTopK so
     * full-depth re-rank reproduces it bit-for-bit. Shortlisting goes through
-    * the partial-aggregable `graft_topk` heap when the extensions are
-    * installed, so only ≤rerank rows per query PER PARTITION reach the
-    * exchange (score = −adc_dist makes the heap's "score desc, smaller id on
-    * ties" contract coincide with the window's (adc_dist asc, c_id asc) —
-    * the same total order at every depth, which is what makes shortlist(R₁)
-    * ⊆ shortlist(R₂) and hence recall monotone); the window fallback
-    * shuffles the full scored relation like q_window_topk.
+    * the partial-aggregable `graft_topk` heap, so only ≤rerank rows per
+    * query PER PARTITION reach the exchange (score = −adc_dist makes the
+    * heap's "score desc, smaller id on ties" contract the total order
+    * (adc_dist asc, c_id asc) at every depth, which is what makes
+    * shortlist(R₁) ⊆ shortlist(R₂) and hence recall monotone).
     */
   private def rerankTop(emb: DataFrame, cand: DataFrame, k: Int, rerank: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val shortlist =
-      if (emb.sparkSession.catalog.functionExists("graft_topk"))
-        cand.groupBy("q_id")
-          .agg(expr(s"graft_topk(-adc_dist, c_id, $rerank)").as("top"))
-          .select(col("q_id"), explode(col("top")).as("t"))
-          .select(col("q_id"), col("t.id").as("c_id"))
-      else
-        cand
-          .withColumn("r", row_number().over(
-            Window.partitionBy("q_id").orderBy(col("adc_dist"), col("c_id"))))
-          .filter(col("r") <= rerank)
-          .drop("r", "adc_dist")
+    val shortlist = cand.groupBy("q_id")
+      .agg(Native.topk(-col("adc_dist"), col("c_id"), rerank).as("top"))
+      .select(col("q_id"), explode(col("top")).as("t"))
+      .select(col("q_id"), col("t.id").as("c_id"))
     val q = emb.filter(col("vec_id") < NQ)
       .select(col("vec_id").as("q_id"), col("embedding").as("qe"))
     val c = emb.filter(col("vec_id") >= NQ)

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{Q, Tables}
-import graft.functions.{Geom, Osgb, OsGrid, Wkt}
+import graft.functions.{Geom, Native, Osgb, OsGrid, Wkt}
 import org.apache.spark.sql.functions._
 
 /** The reference's ETL transform surface: derived length, lineage, typed schema,
@@ -190,29 +190,24 @@ object Routes {
   )
 
   /** CRS reprojection EPSG:27700→4326 — process_cycle_networks.py:70-83.
-    * Spark runs the SAME SQL text as the DuckDB oracle (see
-    * functions/Osgb.scala) over a temp view, so both engines evaluate the
-    * identical IEEE expression DAG; outputs rounded to 5 decimals (~1 m).
+    * The native fused expression (plans/OsgbToWgs84) runs the same double-op
+    * sequence as the shared SQL chain the DuckDB oracle executes (see
+    * functions/Osgb.scala), one codegen'd call per row; outputs rounded to 5
+    * decimals (~1 m).
     */
   val reproject = Q(
     "q_reproject",
     (s, d) => {
-      val base = Tables.part(s, d).select(
+      val ll = Native.osgb(col("easting"), col("northing"))
+      Tables.part(s, d).select(
         col("p_partkey"),
         Geom.pointE("p_partkey").cast("double").as("easting"),
         Geom.pointN("p_partkey").cast("double").as("northing"))
-      if (s.catalog.functionExists("graft_osgb")) {
-        // native fused expression (plans/OsgbToWgs84): same double-op
-        // sequence as the shared-SQL chain, one codegen'd call per row
-        base.select(
+        .select(
           col("p_partkey"), col("easting"), col("northing"),
-          round(element_at(expr("graft_osgb(easting, northing)"), 1), 5).as("lat"),
-          round(element_at(expr("graft_osgb(easting, northing)"), 2), 5).as("lon"))
-          .orderBy("p_partkey")
-      } else {
-        base.createOrReplaceTempView("osgb_base")
-        s.sql(Osgb.reprojectSql("osgb_base", Seq("p_partkey"), 5))
-      }
+          round(element_at(ll, 1), 5).as("lat"),
+          round(element_at(ll, 2), 5).as("lon"))
+        .orderBy("p_partkey")
     },
     Osgb.reprojectSql(
       s"(SELECT p_partkey, CAST(${Geom.pointESql("p_partkey")} AS DOUBLE) AS easting, " +

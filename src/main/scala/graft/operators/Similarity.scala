@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{Q, Tables}
-import graft.functions.{TextFns, VecFns}
+import graft.functions.{Native, TextFns, VecFns}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -31,17 +31,10 @@ object Similarity {
     */
   def cosineTopK(embeddings: DataFrame, k: Int): DataFrame = {
     val q = embeddings.filter(col("vec_id") < NQ)
-      .select(col("vec_id").as("q_id"), col("embedding").as("qe"),
-        sqrt(VecFns.sqNorm(col("embedding"))).as("qnorm"))
+      .select(col("vec_id").as("q_id"), col("embedding").as("qe"))
     val c = embeddings.filter(col("vec_id") >= NQ)
-      .select(col("vec_id").as("c_id"), col("embedding").as("ce"),
-        sqrt(VecFns.sqNorm(col("embedding"))).as("cnorm"))
-    // native codegen'd expression when the GraftExtensions session extension
-    // is installed; HOF fallback otherwise — bit-identical either way
-    val cos =
-      if (embeddings.sparkSession.catalog.functionExists("graft_cosine"))
-        expr("graft_cosine(qe, ce)")
-      else VecFns.dot(col("qe"), col("ce")) / (col("qnorm") * col("cnorm"))
+      .select(col("vec_id").as("c_id"), col("embedding").as("ce"))
+    val cos = Native.cosine(col("qe"), col("ce"))
     val scored = c.crossJoin(broadcast(q))
       .select(col("q_id"), col("c_id"), round(cos, 6).as("score"))
     scored
@@ -120,10 +113,7 @@ object Similarity {
       .select(col("vec_id").as("q_id"), col("bucket"), col("embedding").as("qe"))
     val c = withVec.filter(col("vec_id") >= NQ)
       .select(col("vec_id").as("c_id"), col("bucket"), col("embedding").as("ce"))
-    val cos =
-      if (embeddings.sparkSession.catalog.functionExists("graft_cosine"))
-        expr("graft_cosine(qe, ce)")
-      else VecFns.cosine(col("qe"), col("ce"))
+    val cos = Native.cosine(col("qe"), col("ce"))
     q.join(c, Seq("bucket"))
       .select(col("q_id"), col("c_id"), col("bucket"), round(cos, 6).as("score"))
       .withColumn("rank", row_number().over(
@@ -176,9 +166,7 @@ object Similarity {
       val withVec = withLshBucket(emb)
       val a = withVec.select(col("vec_id").as("v1"), col("bucket"), col("embedding").as("qe"))
       val b = withVec.select(col("vec_id").as("v2"), col("bucket"), col("embedding").as("ce"))
-      val cos =
-        if (emb.sparkSession.catalog.functionExists("graft_cosine")) expr("graft_cosine(qe, ce)")
-        else VecFns.cosine(col("qe"), col("ce"))
+      val cos = Native.cosine(col("qe"), col("ce"))
       a.join(b, Seq("bucket"))
         .filter(col("v1") < col("v2"))
         .select(col("v1"), col("v2"), col("bucket"), round(cos, 6).as("cosine"))
@@ -344,7 +332,6 @@ object Similarity {
   }
 
   def ivfTopK(emb: DataFrame, nprobe: Int, k: Int): DataFrame = {
-    val s = emb.sparkSession
     // the build makes several passes over the corpus (2 Lloyd + the search
     // assignment) — cache the narrow projection once, as any k-means does
     // (Bench/Verify clearCache() between queries reclaims it)
@@ -357,9 +344,7 @@ object Similarity {
     val probes = nearestCells(emb.filter(col("vec_id") < NQ), centroids, "q_id", nprobe)
     val cCells = nearestCells(corpus, centroids, "c_id", 1)
       .select(col("c_id"), col("cell"), col("qe").as("ce"))
-    val cos =
-      if (s.catalog.functionExists("graft_cosine")) expr("graft_cosine(qe, ce)")
-      else VecFns.cosine(col("qe"), col("ce"))
+    val cos = Native.cosine(col("qe"), col("ce"))
     broadcast(probes)
       .join(cCells, Seq("cell"))
       .select(col("q_id"), col("c_id"), col("cell"), round(cos, 6).as("score"))
@@ -399,9 +384,7 @@ object Similarity {
     val cells = nearestCells(corpus, centroids, "c_id", 1)
     val a = cells.select(col("c_id").as("v1"), col("cell"), col("qe"))
     val b = cells.select(col("c_id").as("v2"), col("cell"), col("qe").as("ce"))
-    val cos =
-      if (emb.sparkSession.catalog.functionExists("graft_cosine")) expr("graft_cosine(qe, ce)")
-      else VecFns.cosine(col("qe"), col("ce"))
+    val cos = Native.cosine(col("qe"), col("ce"))
     val drops = a.join(b, Seq("cell"))
       .filter(col("v1") < col("v2"))
       .select(col("v2"), round(cos, 6).as("cosine"))

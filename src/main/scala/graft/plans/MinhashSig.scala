@@ -21,9 +21,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * The permutation coefficients are derived from md5 exactly as the column
   * form and the DuckDB oracle derive them (TextFns.hashN: aj odd 29-bit, bj
   * 28-bit), and the modulus P is the same prime > 2^32, so every value is
-  * bit-identical to the HOF twin — swapping implementations never changes a
-  * signature (Dedup.minhashSignatures keeps the HOF fallback for sessions
-  * without GraftExtensions).
+  * bit-identical to the HOF twin (MinhashSigSpec's reference) — swapping
+  * implementations never changes a signature.
   */
 case class MinhashSig(child: Expression, numPerms: Int) extends UnaryExpression {
 

@@ -9,11 +9,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 /** Native EPSG:27700 → EPSG:4326 reprojection: `graft_osgb(easting,
   * northing)` → `array<double>(lat_deg, lon_deg)`.
   *
-  * The shared-SQL chain (functions/Osgb.scala) stays as the oracle twin and
-  * fallback; this expression runs the same double-op sequence as one fused
-  * JVM call inside whole-stage codegen — ~50 projection layers collapse into
-  * a single static invocation, the hot-path form for reprojecting billions
-  * of coordinates.
+  * The shared-SQL chain (functions/Osgb.scala) stays as the oracle's text
+  * and OsgbExprSpec's reference; this expression runs the same double-op
+  * sequence as one fused JVM call inside whole-stage codegen — ~50
+  * projection layers collapse into a single static invocation, the hot-path
+  * form for reprojecting billions of coordinates.
   */
 case class OsgbToWgs84(left: Expression, right: Expression) extends BinaryExpression {
 

@@ -9,10 +9,10 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Native 32-bit SimHash over a doc's token array: `graft_simhash(tokens)`.
   *
-  * The aggregate formulation (Dedup.simhashDf's fallback) explodes every
-  * token, shuffles the (doc_id, token) pairs to count frequencies, and
-  * shuffles again for the 32 per-bit sums — two wide exchanges whose only
-  * purpose is per-DOC arithmetic. This expression computes the identical
+  * The aggregate formulation (Dedup.simhashAggDf, the spec's reference)
+  * explodes every token, shuffles the (doc_id, token) pairs to count
+  * frequencies, and shuffles again for the 32 per-bit sums — two wide
+  * exchanges whose only purpose is per-DOC arithmetic. This expression computes the identical
   * value in one pass over the row's own token array: local frequency counts,
   * the same md5-hex-prefix 32-bit token hash as TextFns.hash32 / the DuckDB
   * oracle, exact integer bit sums, sign test per bit. Signature generation

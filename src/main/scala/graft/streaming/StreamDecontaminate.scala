@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.functions.Native
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -23,17 +24,14 @@ object StreamDecontaminate {
 
   /** Shingle-hash rows of `docs` (batch or stream) that MIGHT collide with
     * the static `eval` relation, per the Bloom pre-filter. Both inputs need
-    * `doc_id` + `text`; requires GraftExtensions (graft_shingle_hashes /
-    * graft_bloom / graft_might_contain).
+    * `doc_id` + `text`.
     */
   def suspectHits(docs: DataFrame, eval: DataFrame,
                   n: Int = 2, capacity: Int = 400000): DataFrame = {
     def hashes(df: DataFrame) =
-      df.select(col("doc_id"),
-        explode(expr(s"graft_shingle_hashes(split(text, ' '), $n)")).as("h"))
-    val bf = hashes(eval)
-      .agg(expr(s"graft_bloom(h, $capacity, CAST(0.01 AS DOUBLE))").as("bf"))
+      df.select(col("doc_id"), explode(Native.shingleHashes(split(col("text"), " "), n)).as("h"))
+    val bf = hashes(eval).agg(Native.bloom(col("h"), capacity, 0.01).as("bf"))
       .head().getAs[Array[Byte]](0)
-    hashes(docs).filter(call_function("graft_might_contain", lit(bf), col("h")))
+    hashes(docs).filter(Native.mightContain(lit(bf), col("h")))
   }
 }

@@ -16,10 +16,17 @@ class OsgbExprSpec extends SparkSpec {
       (4L, 400000.0, 100000.0), (5L, 530000.0, 180000.0))
       .toDF("k", "easting", "northing")
     base.createOrReplaceTempView("osgb_spec_base")
+    // the chain is ~50 nested projection layers (functions/Osgb.scala); the
+    // default 100 analyzer iterations are too few to resolve it
+    val iters = "spark.sql.analyzer.maxIterations"
+    val prevIters = spark.conf.getOption(iters)
+    spark.conf.set(iters, "1000")
     // 15 decimals ≈ full double precision for values of this magnitude
-    val sqlChain = spark.sql(Osgb.reprojectSql("osgb_spec_base", Seq("k"), 15))
-      .select("k", "lat", "lon").collect()
-      .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2))).toSeq
+    val sqlChain =
+      try spark.sql(Osgb.reprojectSql("osgb_spec_base", Seq("k"), 15))
+        .select("k", "lat", "lon").collect()
+        .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2))).toSeq
+      finally prevIters.fold(spark.conf.unset(iters))(spark.conf.set(iters, _))
     val native = base.select(
       col("k"),
       round(element_at(expr("graft_osgb(easting, northing)"), 1), 15).as("lat"),

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 /** graft_sorted_isect must equal size(array_intersect(...)) on its contract
   * input (sorted ascending, distinct elements) for ANY such pair — property
   * tested — run inside whole-stage codegen, and drive the triangle count to
-  * the same answer as the fallback.
+  * the same answer as the array_intersect form.
   */
 class SortedIntersectSpec extends SparkSpec {
 
@@ -50,7 +50,7 @@ class SortedIntersectSpec extends SparkSpec {
     assert(plan.split("\n").exists(l => l.contains("graft_sorted_isect") &&
       """\*\(\d+\)""".r.findFirstIn(l).nonEmpty),
       s"sorted intersect fell out of whole-stage codegen:\n$plan")
-    // and the count agrees with the documented fallback on the same edges
+    // and the count agrees with the array_intersect form on the same edges
     val spark2 = spark
     import spark2.implicits._
     val li = Tables.lineitem(spark, sf("sf0.001"))
@@ -61,10 +61,10 @@ class SortedIntersectSpec extends SparkSpec {
       .select(col("p.u"), col("p.v")).distinct()
     val adj = graft.operators.Graph.degreeOrientedEdges(e0)
       .groupBy(col("u")).agg(sort_array(collect_list(col("v"))).as("ns"))
-    val fallback = adj.select(col("ns").as("nu"), explode(col("ns")).as("v"))
+    val builtin = adj.select(col("ns").as("nu"), explode(col("ns")).as("v"))
       .join(adj.select(col("u").as("a2"), col("ns").as("nv")), col("v") === col("a2"))
       .select(size(array_intersect(col("nu"), col("nv"))).as("t"))
       .agg(coalesce(sum(col("t")), lit(0L))).head().getLong(0)
-    assert(n == fallback)
+    assert(n == builtin)
   }
 }

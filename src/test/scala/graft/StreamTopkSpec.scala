@@ -17,7 +17,6 @@ final case class TopkRow(key: Long, score: Double, id: Long)
 class StreamTopkSpec extends SparkSpec {
 
   test("per-key top-3 heap accumulates across micro-batches with bounded state") {
-    assume(spark.catalog.functionExists("graft_topk"))
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val ms = MemoryStream[TopkRow]
