@@ -8,25 +8,39 @@ import org.apache.spark.sql.functions._
 
 /** The reference's full ETL, end to end, as one composable pipeline:
   *
-  *   GeoJSON file → flat features → route length + lineage → EPSG:27700→4326
-  *   reprojection of the route start point → OS grid reference → sinks.
+  *   GeoJSON documents → features (the DSv2 connector, `format("geojson")`)
+  *   → route length + lineage → EPSG:27700→4326 reprojection of the route
+  *   start point → OS grid reference → typed property columns → sinks.
   *
   * This is the "a user of the reference could switch" surface: the same
   * inputs/outputs as `process_cycle_networks.py` end to end, but every step is
-  * a declarative Spark plan (one scan, zero driver-side loops). Reprojection
-  * is the native `graft_osgb` expression, which runs the same double-op
-  * sequence as the shared-SQL transform the oracle uses (functions/Osgb.scala).
+  * a declarative Spark plan (one scan, zero driver-side loops). Every entry
+  * point reads through the connector: [[processRoutesNative]] is the
+  * enrichment, and [[processRoutes]] is it plus the typed property flatten
+  * the file sinks write. Reprojection is the native `graft_osgb` expression,
+  * which runs the same double-op sequence as the shared-SQL transform the
+  * oracle uses (functions/Osgb.scala).
   */
 object Pipeline {
 
-  /** Ingest + enrich. The result carries all source properties plus
-    * route_length_m, source_file, start easting/northing, WGS84 lat/lon and
-    * the precision-10 OS grid reference of the route start.
+  /** Ingest + enrich, as flat typed columns: the feature's properties (one
+    * column each, typed by Spark's JSON inference over the non-null
+    * `properties_json` values, so numbers, nested objects and explicit
+    * nulls keep their types), `geometry_type`, `coordinates` (the first
+    * part), then route_length_m, source_file, start easting/northing, WGS84
+    * lat/lon and the precision-10 OS grid reference of the route start.
     */
-  def processRoutes(spark: SparkSession, geojsonPath: String): DataFrame =
-    withLatLonGridRef(GeoJson.ingest(spark, geojsonPath)
-      .withColumn("easting", col("coordinates")(0)(0).cast("double"))
-      .withColumn("northing", col("coordinates")(0)(1).cast("double")))
+  def processRoutes(spark: SparkSession, geojsonPath: String): DataFrame = {
+    import spark.implicits._
+    val routes = processRoutesNative(spark, geojsonPath)
+    val json = col("properties_json")
+    val props = spark.read.json(routes.select(json).where(json.isNotNull).as[String]).schema
+    routes.withColumn("p", from_json(json, props)).select(
+      props.fieldNames.map(n => col("p").getField(n).as(n)).toSeq ++ Seq(
+        col("geometry_type"), element_at(col("parts"), 1).as("coordinates"),
+        col("route_length_m"), col("source_file"), col("easting"), col("northing"),
+        col("lat"), col("lon"), col("os_gridref")): _*)
+  }
 
   /** Full run: process + write both file sinks, mirroring
     * process_cycle_networks.py's geojson/csv output switch (both here).
@@ -43,24 +57,19 @@ object Pipeline {
     (gj, csv)
   }
 
-  /** The same enrichment through the native surface: DSv2 connector read
-    * (multi-part aware, pruned at the reader), nested-fold multi-part length,
-    * then the same reprojection and grid reference as [[processRoutes]]
-    * (PipelineSpec asserts the equivalence).
+  /** The enrichment over the connector's own columns: DSv2 read (a file, a
+    * directory of documents, multi-part aware, pruned at the reader),
+    * nested-fold multi-part length, start easting/northing, then the
+    * `graft_osgb` lat/lon rounded to 6 decimals (~0.1 m) and the grid
+    * reference.
     */
   def processRoutesNative(spark: SparkSession, geojsonPath: String): DataFrame = {
     val feats = spark.read.format("geojson").load(geojsonPath)
-    withLatLonGridRef(GeoJson.multiPartLength(feats)
-      .withColumn("easting", element_at(element_at(element_at(col("parts"), 1), 1), 1).cast("double"))
-      .withColumn("northing", element_at(element_at(element_at(col("parts"), 1), 1), 2).cast("double")))
-  }
-
-  /** Appends `lat`/`lon` (the `graft_osgb` reprojection of easting/northing,
-    * rounded to 6 decimals, ~0.1 m) and the precision-10 `os_gridref`.
-    */
-  private def withLatLonGridRef(routes: DataFrame): DataFrame = {
+    val start = element_at(element_at(col("parts"), 1), 1)
     val ll = Native.osgb(col("easting"), col("northing"))
-    routes
+    GeoJson.multiPartLength(feats)
+      .withColumn("easting", element_at(start, 1).cast("double"))
+      .withColumn("northing", element_at(start, 2).cast("double"))
       .withColumn("lat", round(element_at(ll, 1), 6))
       .withColumn("lon", round(element_at(ll, 2), 6))
       .withColumn("os_gridref", OsGrid.gridRef(col("easting"), col("northing"), 10))

@@ -10,7 +10,7 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * swap in a catalog / bucketed tables / a different source is this object.
   */
 object Tables {
-  private case class CachedRel(stamp: Long, df: DataFrame)
+  private case class CachedRel(stamp: String, df: DataFrame)
   private val relMemo =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), CachedRel]()
 
@@ -20,25 +20,22 @@ object Tables {
     * local mode (measured) and a driver-side footer fetch
     * per query at cluster scale. A real deployment resolves tables from a
     * catalog that stores schema + file index; this memo is that catalog
-    * seam. The stamp (top-level dir mtime ^ length) invalidates the entry
-    * whenever the dataset directory changes — files added, removed, or
-    * rewritten in place all bump the directory mtime — so a fresh listing
+    * seam. The stamp is [[Warehouse.fingerprint]] (recursive file count,
+    * bytes and max mtime, through the Hadoop FileSystem of any scheme): a
+    * part file added, removed or rewritten in place changes it even when
+    * the dataset directory's own mtime and size do not, so a fresh listing
     * and schema are taken exactly when the data could have changed.
     */
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    val local = new java.io.File(path.stripPrefix("file:"))
-    if (!local.exists) spark.read.parquet(path) // non-local URI: no memo
+    val stamp = Warehouse.fingerprint(spark, path)
+    val key = (spark, path)
+    val c = relMemo.get(key)
+    if (c != null && c.stamp == stamp) c.df
     else {
-      val stamp = local.lastModified ^ (local.length << 24)
-      val key = (spark, path)
-      val c = relMemo.get(key)
-      if (c != null && c.stamp == stamp) c.df
-      else {
-        val df = spark.read.parquet(path)
-        relMemo.put(key, CachedRel(stamp, df))
-        df
-      }
+      val df = spark.read.parquet(path)
+      relMemo.put(key, CachedRel(stamp, df))
+      df
     }
   }
 

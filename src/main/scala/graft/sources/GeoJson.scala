@@ -1,65 +1,20 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** GeoJSON ingest — FeatureCollection, single Feature, or bare feature list
-  * (reference src/process_cycle_networks.py:18-55).
-  *
-  * Spark-first: `spark.read.json` does the parse (distributed, schema
-  * inferred), the three accepted shapes normalize to one exploded feature
-  * relation, and property flattening plus derived route length are plain
-  * Catalyst expressions. No per-row Python-style loop anywhere — at 100 TB
-  * this is a parallel scan + projection.
+/** Route length over the GeoJSON connector's features
+  * (reference src/process_cycle_networks.py:85-99). Documents are read by
+  * [[GeoJsonDataSource]] (`spark.read.format("geojson")`); the length is a
+  * plain Catalyst fold, so at 100 TB this is a parallel scan + projection.
   */
 object GeoJson {
 
-  /** Read a GeoJSON file (any of the three shapes) into a flat DataFrame:
-    * one row per feature, properties flattened to columns, plus
-    * `geometry_type` and raw `coordinates`.
-    */
-  def read(spark: SparkSession, path: String): DataFrame = {
-    val raw = spark.read.option("multiLine", "true").json(path)
-    val fields = raw.schema.fieldNames.toSet
-    val features =
-      if (fields.contains("features"))
-        raw.select(explode(col("features")).as("f")) // FeatureCollection
-      else
-        raw.select(struct(raw.columns.map(col): _*).as("f")) // Feature / bare list row
-    features.select(
-      col("f.properties.*"),
-      col("f.geometry.type").as("geometry_type"),
-      col("f.geometry.coordinates").as("coordinates"))
-  }
-
-  /** Planar length of a LineString coordinates column (array of [x,y]) in
-    * source units — the analog of `row.geometry.length`
-    * (process_cycle_networks.py:91), as a single fold expression.
-    */
-  def routeLength(df: DataFrame): DataFrame =
-    df.withColumn("route_length_m", expr(
-      // the size guard matters: sequence(0, -1) is the DESCENDING [0, -1],
-      // not empty, and the out-of-range indexing would null the length for
-      // degenerate single-point geometries instead of yielding 0
-      """CASE WHEN size(coordinates) < 2 THEN 0D ELSE aggregate(
-        |  sequence(0, size(coordinates) - 2),
-        |  0D,
-        |  (acc, i) -> acc + sqrt(
-        |    pow(coordinates[i+1][0] - coordinates[i][0], 2) +
-        |    pow(coordinates[i+1][1] - coordinates[i][1], 2))) END""".stripMargin))
-
-  /** Full ingest: read + derived length + lineage column
-    * (process_cycle_networks.py:85-99).
-    */
-  def ingest(spark: SparkSession, path: String): DataFrame =
-    routeLength(read(spark, path))
-      .withColumn("source_file", regexp_extract(input_file_name(), "([^/]+)$", 1))
-
   /** Planar length over the connector's normalized multi-part `parts` column
-    * (array<array<array<double>>>): sum of per-part polyline lengths — the
-    * multi-geometry analog of [[routeLength]], matching how the reference's
-    * `row.geometry.length` works on any shapely geometry including
-    * MultiLineString (process_cycle_networks.py:91, app/app.py:11).
+    * (array<array<array<double>>>): sum of per-part polyline lengths over
+    * x and y, matching how the reference's `row.geometry.length` works on any
+    * shapely geometry including MultiLineString
+    * (process_cycle_networks.py:91, app/app.py:11).
     */
   def multiPartLength(df: DataFrame): DataFrame =
     df.withColumn("route_length_m", expr(

@@ -33,6 +33,10 @@ import scala.jdk.CollectionConverters._
   *                     MultiPolygon flattens its polygons' rings)
   *   - `properties`    map<string,string> — scalar values verbatim, nested
   *                     values as compact JSON
+  *   - `properties_json` the feature's whole `properties` object as compact
+  *                     JSON text (null when absent or JSON null), the input
+  *                     a typed flatten (`from_json`) parses; built only when
+  *                     a query requires it
   *   - `source_file`   document name for lineage
   *
   * Scale shape: documents are packed into scan partitions by Spark's own
@@ -45,7 +49,9 @@ import scala.jdk.CollectionConverters._
   * pruning is pushed into the reader (SupportsPushDownRequiredColumns) so a
   * properties-only query never materializes coordinate arrays.
   *
-  * Inputs are `load(paths*)` file paths or a `url` option. URL fetch goes
+  * Inputs are `load(paths*)` file paths or a `url` option; a batch read
+  * expands a local directory into its `.geojson`/`.json` documents, sorted by
+  * name ([[GeoJsonDataSource.listDocs]]). URL fetch goes
   * through [[GeoJsonFetch]]: `file:` URLs (and bare paths) resolve locally;
   * `http(s):` is the production fetch seam and fails fast in this offline
   * environment with a clear message rather than a stub result.
@@ -64,6 +70,7 @@ object GeoJsonDataSource {
     StructField("geometry_type", StringType),
     StructField("parts", ArrayType(ArrayType(ArrayType(DoubleType)))),
     StructField("properties", MapType(StringType, StringType)),
+    StructField("properties_json", StringType),
     StructField("source_file", StringType),
     // per-feature envelope — null for geometry-less features. An
     // ST_Intersects(query-envelope) predicate decomposes into four plain
@@ -86,11 +93,26 @@ object GeoJsonDataSource {
     all
   }
 
+  /** The `.geojson`/`.json` documents of a local directory, sorted by name:
+    * a batch read's directory input and a stream's per-batch queue listing.
+    */
+  def listDocs(dir: String): Seq[String] =
+    Option(localFile(dir).listFiles()).getOrElse(Array.empty)
+      .filter(f => f.isFile && (f.getName.endsWith(".geojson") || f.getName.endsWith(".json")))
+      .map(_.getAbsolutePath).sorted.toSeq
+
+  /** Batch inputs with every local directory expanded by [[listDocs]]. */
+  def documents(inputs: Seq[String]): Seq[String] =
+    inputs.flatMap(p => if (localFile(p).isDirectory) listDocs(p) else Seq(p))
+
+  private def localFile(doc: String): java.io.File =
+    new java.io.File(if (doc.startsWith("file:")) new java.net.URI(doc).getPath else doc)
+
   /** Byte size of a document that resolves to a local file (bare path or
     * `file:` url); None for the remote-fetch seam or a missing file.
     */
   def localSize(doc: String): Option[Long] = {
-    val f = new java.io.File(if (doc.startsWith("file:")) new java.net.URI(doc).getPath else doc)
+    val f = localFile(doc)
     if (f.isFile) Some(f.length()) else None
   }
 
@@ -219,10 +241,11 @@ class GeoJsonScanBuilder(options: CaseInsensitiveStringMap)
     case _ => None
   }
 
-  /** LIMIT pushdown, PARTIAL (per-document): each partition reader stops
-    * pulling from the streaming JSON parser after `limit` matching features
-    * — a LIMIT 10 over a million-feature document parses ~10 features, not
-    * the file. Declared partial so Spark keeps its global Limit above the
+  /** LIMIT pushdown, PARTIAL (per-document): each per-document reader stops
+    * building rows after `limit` matching features. It saves row building,
+    * not parsing: [[GeoJsonFetch.fetch]] reads the whole file and a
+    * FeatureCollection or bare array is read as one JSON tree before the
+    * first row. Declared partial so Spark keeps its global Limit above the
     * scan (several documents each emit up to `limit` rows).
     */
   override def pushLimit(l: Int): Boolean = { limit = Some(l); true }
@@ -231,10 +254,11 @@ class GeoJsonScanBuilder(options: CaseInsensitiveStringMap)
   /** COUNT(*) pushdown (Spark only offers an aggregate here when every
     * filter was fully pushed, which this builder guarantees for the shapes
     * it accepts): the scan then emits ONE pre-counted row per document —
-    * features are tallied during the parse and no feature row, geometry
-    * array or property map is ever materialized. Partial pushdown: Spark
-    * still sums the per-document counts, so multi-document reads stay
-    * parallel.
+    * features are tallied over the parsed document and no feature row,
+    * geometry array or property map is ever built. The document is still
+    * fetched and parsed whole, so this saves row building, not parsing.
+    * Partial pushdown: Spark still sums the per-document counts, so
+    * multi-document reads stay parallel.
     */
   override def pushAggregation(aggregation: Aggregation): Boolean = {
     val aggs = aggregation.aggregateExpressions()
@@ -242,9 +266,9 @@ class GeoJsonScanBuilder(options: CaseInsensitiveStringMap)
     val oneCountStar = aggs.length == 1 && aggs(0).isInstanceOf[CountStar]
     countStar = gbs.isEmpty && oneCountStar
     // GROUP BY geometry_type COUNT(*) — the reference viewer's categorical
-    // count — tallied during the parse into a per-type map (bounded by the
-    // handful of GeoJSON geometry types), one row per (document, type), no
-    // feature row ever materialized. Partial pushdown like the plain count:
+    // count — tallied over the parsed document into a per-type map (bounded
+    // by the handful of GeoJSON geometry types), one row per (document,
+    // type), no feature row ever built. Partial pushdown like the plain count:
     // Spark sums the per-document tallies, so multi-document reads stay
     // parallel and the final grouping is exact.
     groupByGeom = !countStar && oneCountStar && gbs.length == 1 && (gbs(0) match {
@@ -316,10 +340,11 @@ class GeoJsonScanBuilder(options: CaseInsensitiveStringMap)
 
   override def build(): Scan = {
     val (gk, gnn) = effectiveGeomKeep
+    def docs = GeoJsonDataSource.documents(GeoJsonDataSource.inputs(options))
     if (countStar)
-      new GeoJsonCountScan(GeoJsonDataSource.inputs(options), fileKeep, gk, gnn, bboxPreds)
+      new GeoJsonCountScan(docs, fileKeep, gk, gnn, bboxPreds)
     else if (groupByGeom)
-      new GeoJsonGroupCountScan(GeoJsonDataSource.inputs(options), fileKeep, gk, gnn, bboxPreds)
+      new GeoJsonGroupCountScan(docs, fileKeep, gk, gnn, bboxPreds)
     else
       new GeoJsonScan(GeoJsonDataSource.inputs(options), required, fileKeep, gk, gnn, limit,
         bboxPreds)
@@ -458,6 +483,9 @@ class GeoJsonScan(paths: Seq[String], required: StructType,
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
 
+  // `paths` as given to load(); a stream reads its one directory as a queue
+  private lazy val docs = GeoJsonDataSource.documents(paths)
+
   /** RUNTIME document pruning (the connector's dynamic partition pruning):
     * when this scan sits under a join on `source_file`, Spark collects the
     * build side's values at execution and calls [[filter]] before
@@ -503,13 +531,13 @@ class GeoJsonScan(paths: Seq[String], required: StructType,
     * (join-driven) pruning delivered through [[filter]].
     */
   def prunedPaths: Seq[String] =
-    GeoJsonDataSource.prune(paths, Seq(fileKeep, runtimeKeep), bboxPreds)
+    GeoJsonDataSource.prune(docs, Seq(fileKeep, runtimeKeep), bboxPreds)
   override def planInputPartitions(): Array[InputPartition] =
     GeoJsonDataSource.pack(prunedPaths)
   override def createReaderFactory(): PartitionReaderFactory =
     new GeoJsonReaderFactory(required, geomKeep, geomNonNull, limit, bboxPreds)
   override def description(): String =
-    s"GeoJsonScan docs=${prunedPaths.size}/${paths.size}" +
+    s"GeoJsonScan docs=${prunedPaths.size}/${docs.size}" +
       geomKeep.fold("")(g => s" geometry_type IN ${g.mkString("(", ",", ")")}") +
       limit.fold("")(l => s" limit=$l") +
       (if (bboxPreds.isEmpty) "" else s" bbox=${bboxPreds.size} preds")
@@ -563,16 +591,9 @@ class GeoJsonMicroBatchStream(dir: String, required: StructType)
     extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream {
   import org.apache.spark.sql.connector.read.streaming.Offset
 
-  private def listDocs(): Seq[String] = {
-    val d = new java.io.File(if (dir.startsWith("file:")) new java.net.URI(dir).getPath else dir)
-    Option(d.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isFile && (f.getName.endsWith(".geojson") || f.getName.endsWith(".json")))
-      .map(_.getAbsolutePath).sorted.toSeq
-  }
-
   override def initialOffset(): Offset = GeoJsonStreamOffset("")
   override def latestOffset(): Offset =
-    GeoJsonStreamOffset(listDocs().lastOption.getOrElse(""))
+    GeoJsonStreamOffset(GeoJsonDataSource.listDocs(dir).lastOption.getOrElse(""))
   override def deserializeOffset(json: String): Offset =
     GeoJsonStreamOffset(new ObjectMapper().readTree(json).get("watermark").asText())
   override def commit(end: Offset): Unit = ()
@@ -581,7 +602,7 @@ class GeoJsonMicroBatchStream(dir: String, required: StructType)
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val lo = start.asInstanceOf[GeoJsonStreamOffset].watermark
     val hi = end.asInstanceOf[GeoJsonStreamOffset].watermark
-    GeoJsonDataSource.pack(listDocs().filter(p => p > lo && p <= hi))
+    GeoJsonDataSource.pack(GeoJsonDataSource.listDocs(dir).filter(p => p > lo && p <= hi))
   }
   override def createReaderFactory(): PartitionReaderFactory =
     new GeoJsonReaderFactory(required)
@@ -810,11 +831,6 @@ class GeoJsonReaderFactory(required: StructType,
       new GeoJsonPartitionReader(_, required, geomKeep, geomNonNull, limit, bboxPreds))
 }
 
-/** Parses one document and streams its features as InternalRows, building
-  * only the pruned columns. A pushed geometry_type filter is enforced here,
-  * before any row is built (a feature with no geometry has a null type and
-  * never matches, same as Spark's EqualTo null semantics).
-  */
 /** Shared document → feature iteration and pushed-filter match, used by both
   * the row reader and the count reader so the two paths can never disagree
   * about what a feature is.
@@ -864,6 +880,11 @@ private[sources] object GeoJsonFeatures {
   }
 }
 
+/** Parses one document and emits its features as InternalRows, building
+  * only the pruned columns. A pushed geometry_type filter is enforced here,
+  * before any row is built (a feature with no geometry has a null type and
+  * never matches, same as Spark's EqualTo null semantics).
+  */
 class GeoJsonPartitionReader(path: String, required: StructType,
                              geomKeep: Option[Set[String]] = None,
                              geomNonNull: Boolean = false,
@@ -875,9 +896,9 @@ class GeoJsonPartitionReader(path: String, required: StructType,
   // so envelope-free scans never pay the coordinate walk
   private val needEnv = required.fieldNames.exists(GeoJsonBbox.Fields.contains)
 
-  // rows emitted so far — the pushed-limit cap. The features iterator is a
-  // STREAMING parse (Jackson pull parser), so refusing to advance past the
-  // cap stops reading the document, not just building rows.
+  // rows emitted so far — the pushed-limit cap. The document was fetched
+  // whole and a FeatureCollection or array parsed as one tree, so the cap
+  // saves building rows, not reading the document.
   private var emitted = 0L
 
   private val fileName = path.split('/').last
@@ -885,9 +906,11 @@ class GeoJsonPartitionReader(path: String, required: StructType,
     GeoJsonFeatures.iterate(path).zipWithIndex.map { case (n, i) => (n, i.toLong) }
   private var current: InternalRow = _
 
-  /** Coordinates of any geometry type, normalized to parts→points→xy. */
+  /** Coordinates of any geometry type, normalized to parts→points, each
+    * point keeping every ordinate it has (x, y and any z/m).
+    */
   private def partsOf(geom: JsonNode): Array[Array[Array[Double]]] = {
-    def pt(n: JsonNode): Array[Double] = Array(n.get(0).asDouble(), n.get(1).asDouble())
+    def pt(n: JsonNode): Array[Double] = n.elements().asScala.map(_.asDouble()).toArray
     def line(n: JsonNode): Array[Array[Double]] = n.elements().asScala.map(pt).toArray
     val c = geom.get("coordinates")
     Option(geom.get("type")).filterNot(_.isNull).map(_.asText()).getOrElse("") match {
@@ -903,6 +926,7 @@ class GeoJsonPartitionReader(path: String, required: StructType,
 
   private def toRow(f: JsonNode, idx: Long): InternalRow = {
     val geom = Option(f.get("geometry")).filterNot(_.isNull)
+    val props = Option(f.get("properties")).filterNot(_.isNull)
     lazy val env = if (needEnv) GeoJsonBbox.envelope(f) else None
     def envCol(pick: GeoJsonBbox.Env => Double): Any =
       env.map(e => pick(e): java.lang.Double).orNull
@@ -917,7 +941,7 @@ class GeoJsonPartitionReader(path: String, required: StructType,
               new GenericArrayData(p.map(d => d: Any)): Any)): Any))
         }.orNull
       case "properties" =>
-        Option(f.get("properties")).filterNot(_.isNull).map { props =>
+        props.map { props =>
           val kv = props.fields().asScala.toArray.map { e =>
             // JSON null stays a null map value (the writer emits nulls for
             // them, so stringifying would break the round-trip as "null")
@@ -929,6 +953,7 @@ class GeoJsonPartitionReader(path: String, required: StructType,
           }
           new ArrayBasedMapData(new GenericArrayData(kv.map(_._1)), new GenericArrayData(kv.map(_._2)))
         }.orNull
+      case "properties_json" => props.map(p => UTF8String.fromString(p.toString)).orNull
       case "source_file" => UTF8String.fromString(fileName)
       case "bbox_minx" => envCol(_._1)
       case "bbox_miny" => envCol(_._2)

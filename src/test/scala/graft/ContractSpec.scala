@@ -25,12 +25,30 @@ class ContractSpec extends SparkSpec {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
-  test("all queries run at sf0.001 and return rows") {
-    // head(1) keeps every output column, where a count() would let Catalyst
-    // prune the projections this is meant to run
+  /** One build of a registered query at sf0.001, collected in full (every
+    * output column, unlike a count()) at 4 and at 32 shuffle partitions. */
+  private case class Result(schema: org.apache.spark.sql.types.StructType,
+                            rows4: Seq[String], rows32: Seq[String])
+
+  /** Every registered query built and collected once, shared by the row,
+    * DECIMAL and partitioning checks; a failed build is kept and rethrown
+    * by each check that reads it. */
+  private lazy val results: Seq[(String, scala.util.Try[Result])] = {
     val d = sf()
-    SparkEntry.queries.foreach { case (name, fn) =>
-      assert(fn(spark, d).head(1).nonEmpty, s"$name returned 0 rows")
+    val s32 = spark.newSession()
+    s32.conf.set("spark.sql.shuffle.partitions", "32")
+    SparkEntry.queries.toSeq.map { case (name, fn) =>
+      name -> scala.util.Try {
+        val df = fn(spark, d)
+        Result(df.schema, df.collect().map(_.toString).toSeq,
+          fn(s32, d).collect().map(_.toString).toSeq)
+      }
+    }
+  }
+
+  test("all queries run at sf0.001 and return rows") {
+    results.foreach { case (name, r) =>
+      assert(r.get.rows4.nonEmpty, s"$name returned 0 rows")
     }
   }
 
@@ -143,9 +161,8 @@ class ContractSpec extends SparkSpec {
       case s: StructType      => s.fields.exists(f => hasDecimal(f.dataType))
       case _                  => false
     }
-    val d = sf()
-    SparkEntry.queries.foreach { case (name, fn) =>
-      val bad = fn(spark, d).schema.fields.filter(f => hasDecimal(f.dataType))
+    results.foreach { case (name, r) =>
+      val bad = r.get.schema.fields.filter(f => hasDecimal(f.dataType))
       assert(bad.isEmpty,
         s"$name emits DECIMAL column(s) ${bad.map(_.name).mkString(",")} — " +
           "cast to DOUBLE/BIGINT so the driver's typed hash matches the oracle")
@@ -270,13 +287,8 @@ class ContractSpec extends SparkSpec {
     // pre-rounded sort keys and deterministic ORDER BYs must make every
     // registered result independent of physical parallelism — a raw
     // double sum or unordered limit shows up here as a diff
-    val d = sf()
-    val s32 = spark.newSession()
-    s32.conf.set("spark.sql.shuffle.partitions", "32")
-    SparkEntry.queries.foreach { case (name, fn) =>
-      val a = fn(spark, d).collect().map(_.toString).toSeq
-      val b = fn(s32, d).collect().map(_.toString).toSeq
-      assert(a == b, s"$name differs between 4 and 32 shuffle partitions")
+    results.foreach { case (name, r) =>
+      assert(r.get.rows4 == r.get.rows32, s"$name differs between 4 and 32 shuffle partitions")
     }
   }
 }

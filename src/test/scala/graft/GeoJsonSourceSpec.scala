@@ -36,27 +36,30 @@ class GeoJsonSourceSpec extends SparkSpec {
     assert(counts == Map(Option("LineString") -> 1L, Option.empty[String] -> 1L))
   }
 
+  private val enriched = Seq("geometry_type", "coordinates", "route_length_m", "source_file",
+    "easting", "northing", "lat", "lon", "os_gridref")
+
   test("reads a FeatureCollection") {
     val path = tmpFile("fc.json", s"""{"type": "FeatureCollection", "features": [$feature, $feature]}""")
-    val df = GeoJson.read(spark, path)
+    val df = Pipeline.processRoutes(spark, path)
     assert(df.count() == 2)
-    assert(df.columns.toSet == Set("route_id", "local_authority", "route_type", "geometry_type", "coordinates"))
+    assert(df.columns.toSeq == Seq("local_authority", "route_id", "route_type") ++ enriched)
     assert(df.select("geometry_type").distinct().collect().map(_.getString(0)).toSeq == Seq("LineString"))
   }
 
   test("reads a single Feature") {
     val path = tmpFile("single.json", feature)
-    assert(GeoJson.read(spark, path).count() == 1)
+    assert(Pipeline.processRoutes(spark, path).count() == 1)
   }
 
   test("reads a bare feature list") {
     val path = tmpFile("list.json", s"[$feature, $feature, $feature]")
-    assert(GeoJson.read(spark, path).count() == 3)
+    assert(Pipeline.processRoutes(spark, path).count() == 3)
   }
 
   test("ingest derives route length and lineage") {
     val path = tmpFile("fc2.json", s"""{"type": "FeatureCollection", "features": [$feature]}""")
-    val row = GeoJson.ingest(spark, path).collect().head
+    val row = Pipeline.processRoutes(spark, path).collect().head
     // segment (300, 400) → length 500 (3-4-5 triangle)
     assert(math.abs(row.getAs[Double]("route_length_m") - 500.0) < 1e-9)
     assert(row.getAs[String]("source_file") == "fc2.json")
@@ -77,7 +80,7 @@ class GeoJsonSourceSpec extends SparkSpec {
     val df = spark.read.format("geojson").load(bare)
     assert(df.count() == 3)
     assert(df.schema.fieldNames.toSeq ==
-      Seq("feature_idx", "geometry_type", "parts", "properties", "source_file",
+      Seq("feature_idx", "geometry_type", "parts", "properties", "properties_json", "source_file",
         "bbox_minx", "bbox_miny", "bbox_maxx", "bbox_maxy"))
     val first = df.orderBy("feature_idx").collect().head
     assert(first.getAs[Map[String, String]]("properties")("local_authority") == "Edinburgh")
@@ -195,8 +198,9 @@ class GeoJsonSourceSpec extends SparkSpec {
     // above it (partial pushdown — several documents each emit up to N)
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("limit=2"), s"expected pushed limit in:\n$plan")
-    // reader-level: the cap stops the STREAMING parse, not just row
-    // building — next() refuses to advance once the cap is reached
+    // reader-level: next() refuses to advance once the cap is reached, so
+    // no row past it is built (the document itself was fetched and parsed
+    // whole)
     val reader = new graft.sources.GeoJsonPartitionReader(
       doc, graft.sources.GeoJsonDataSource.Schema, limit = Some(2))
     var n = 0
@@ -653,5 +657,26 @@ class GeoJsonSourceSpec extends SparkSpec {
     val dim = spark.read.parquet(dimPath).filter(col("tag") === "keep")
     val joined = routes.join(dim, "route_id")
     assert(joined.select("route_id").collect().map(_.getString(0)).toSeq == Seq("R1"))
+  }
+
+  test("3-D positions keep every ordinate through read, write and processRoutes") {
+    val path = tmpFile("z.json",
+      """{"type": "Feature", "properties": {"route_id": "Z1"},
+        | "geometry": {"type": "LineString",
+        |  "coordinates": [[325000.0, 673000.0, 12.5], [325300.0, 673400.0, 40.0]]}}""".stripMargin)
+    val line = Seq(Seq(325000.0, 673000.0, 12.5), Seq(325300.0, 673400.0, 40.0))
+    def parts(df: DataFrame) = df.select("parts").head().getSeq[collection.Seq[collection.Seq[Double]]](0)
+    val df = spark.read.format("geojson").load(path)
+    assert(parts(df) == Seq(line))
+    val outDir = Files.createTempDirectory("gjz").toString + "/out"
+    df.write.format("geojson").mode("overwrite").save(outDir)
+    val back = spark.read.format("geojson").load(new java.io.File(outDir).listFiles()
+      .filter(_.getName.startsWith("part-")).map(_.getAbsolutePath): _*)
+    assert(parts(back) == Seq(line))
+    // the envelope and the length read x and y only
+    val row = Pipeline.processRoutes(spark, path).select("coordinates", "route_length_m").head()
+    assert(row.getSeq[collection.Seq[Double]](0) == line)
+    assert(math.abs(row.getDouble(1) - 500.0) < 1e-9)
+    assert(df.select("bbox_minx", "bbox_maxy").head() == Row(325000.0, 673400.0))
   }
 }
