@@ -1,7 +1,9 @@
 package graft.operators
 
 import graft.{Q, Tables}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.graftglue.Bridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -31,6 +33,12 @@ object Aggregates {
       |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin
   )
 
+  /** The order → customer → nation → region tables the ROLLUP and CUBE
+    * text names. */
+  private def starTables(s: SparkSession, d: String): Seq[(String, DataFrame)] = Seq(
+    "orders" -> Tables.orders(s, d), "customer" -> Tables.customer(s, d),
+    "nation" -> Tables.nation(s, d), "region" -> Tables.region(s, d))
+
   /** ROLLUP over the region/nation hierarchy; grouping nulls are coalesced to
     * 'ALL' on both sides so sort order is engine-independent.
     *
@@ -52,13 +60,7 @@ object Aggregates {
 
   val rollup_ = Q(
     "q_rollup",
-    (s, d) => {
-      Tables.orders(s, d).createOrReplaceTempView("orders")
-      Tables.customer(s, d).createOrReplaceTempView("customer")
-      Tables.nation(s, d).createOrReplaceTempView("nation")
-      Tables.region(s, d).createOrReplaceTempView("region")
-      s.sql(rollupSql)
-    },
+    (s, d) => Bridge.sqlOver(s, rollupSql, starTables(s, d): _*),
     rollupSql
   )
 
@@ -81,13 +83,7 @@ object Aggregates {
 
   val cube_ = Q(
     "q_cube",
-    (s, d) => {
-      Tables.orders(s, d).createOrReplaceTempView("orders")
-      Tables.customer(s, d).createOrReplaceTempView("customer")
-      Tables.nation(s, d).createOrReplaceTempView("nation")
-      Tables.region(s, d).createOrReplaceTempView("region")
-      s.sql(cubeSql)
-    },
+    (s, d) => Bridge.sqlOver(s, cubeSql, starTables(s, d): _*),
     cubeSql
   )
 
@@ -128,10 +124,7 @@ object Aggregates {
 
   val groupingSets = Q(
     "q_grouping_sets",
-    (s, d) => {
-      Tables.events(s, d).createOrReplaceTempView("events")
-      s.sql(groupingSetsSql)
-    },
+    (s, d) => Bridge.sqlOver(s, groupingSetsSql, "events" -> Tables.events(s, d)),
     groupingSetsSql
   )
 

@@ -3,6 +3,7 @@ package graft.operators
 import graft.{Q, Tables}
 import graft.functions.Geom
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.graftglue.Bridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -419,20 +420,7 @@ object Relational {
     * hand-written form; THIS row is about accepting the correlated surface
     * syntax and planning it scalably.
     */
-  val lateralTopK = Q(
-    "q_lateral",
-    (s, d) => {
-      Tables.customer(s, d).createOrReplaceTempView("customer")
-      Tables.orders(s, d).createOrReplaceTempView("orders")
-      s.sql(
-        """SELECT c.c_custkey, t.o_orderkey, t.o_totalprice
-          |FROM customer c,
-          |LATERAL (
-          |  SELECT o_orderkey, o_totalprice FROM orders
-          |  WHERE o_custkey = c.c_custkey
-          |  ORDER BY o_totalprice DESC, o_orderkey LIMIT 2) t
-          |ORDER BY c.c_custkey, t.o_totalprice DESC, t.o_orderkey""".stripMargin)
-    },
+  private val lateralSql: String =
     """SELECT c.c_custkey, t.o_orderkey, t.o_totalprice
       |FROM customer c,
       |LATERAL (
@@ -440,6 +428,12 @@ object Relational {
       |  WHERE o_custkey = c.c_custkey
       |  ORDER BY o_totalprice DESC, o_orderkey LIMIT 2) t
       |ORDER BY c.c_custkey, t.o_totalprice DESC, t.o_orderkey""".stripMargin
+
+  val lateralTopK = Q(
+    "q_lateral",
+    (s, d) => Bridge.sqlOver(s, lateralSql,
+      "customer" -> Tables.customer(s, d), "orders" -> Tables.orders(s, d)),
+    lateralSql
   )
 
   val all: Seq[Q] = Seq(filterLimit, distinctSorted, schemaMap, jsonFlatten, boundsAgg,

@@ -2,6 +2,7 @@ package graft.sinks
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
 
 /** The reference's three sinks, as DataFrameWriter plans.
   *
@@ -12,38 +13,62 @@ import org.apache.spark.sql.functions._
   */
 object Sinks {
 
-  /** GeoJSON sink (newline-delimited Features — the distributed-friendly
-    * GeoJSON form) with a timestamped directory name, mirroring
-    * process_cycle_networks.py:139-144. Expects `geometry_type`,
-    * `coordinates`, and the property columns to keep.
+  /** GeoJSON sink with a timestamped directory name, mirroring
+    * process_cycle_networks.py:139-144, written through the connector's own
+    * writer (`format("geojson")`): newline-delimited Features in
+    * `part-<partition>-<task>.geojson` files, each beside the hidden `.bbox`
+    * sidecar its scan prunes on, so `load(<returned dir>)` reads them back.
+    * Expects `geometry_type`, `coordinates` (one line) and the property
+    * columns to keep; a row with null `coordinates` writes
+    * `"geometry": null`. `outDir` is a local path or a `file:` URI: the
+    * connector's writer commits through the local filesystem.
     */
   def writeGeoJson(df: DataFrame, outDir: String, baseName: String, timestamp: String,
                    propCols: Seq[String]): String = {
     val path = s"$outDir/${baseName}_$timestamp.geojson"
-    df.select(featureJson(propCols).as("value")).write.mode(SaveMode.Overwrite).text(path)
+    df.select(col("geometry_type"),
+        when(col("coordinates").isNotNull, array(col("coordinates")))
+          .cast("array<array<array<double>>>").as("parts"),
+        propertiesJson(propCols).as("properties_json"))
+      .write.format("geojson").mode(SaveMode.Overwrite).save(path)
     path
   }
 
-  /** One serialized GeoJSON Feature per row. `ignoreNullFields=false` keeps
-    * null-valued properties as explicit JSON nulls — the reference's GeoJSON
-    * writer preserves them (GeoPandas `to_file` keeps every property key).
+  /** `to_json` options that keep null-valued fields as explicit JSON nulls —
+    * the reference's GeoJSON writer preserves them (GeoPandas `to_file` keeps
+    * every property key).
     */
+  private val keepNulls = Map("ignoreNullFields" -> "false")
+
+  /** The property columns as one JSON object. */
+  private def propertiesJson(propCols: Seq[String]): Column =
+    to_json(struct(propCols.map(col): _*), keepNulls)
+
+  /** One serialized GeoJSON Feature per row. */
   private def featureJson(propCols: Seq[String]): Column =
     to_json(struct(
       lit("Feature").as("type"),
       struct(col("geometry_type").as("type"), col("coordinates")).as("geometry"),
       struct(propCols.map(col): _*).as("properties")),
-      Map("ignoreNullFields" -> "false"))
+      keepNulls)
 
   /** CSV sink with a WKT geometry column, mirroring
     * process_cycle_networks.py:146-153 (geometry dropped, `geometry_wkt`
-    * kept). Caller provides the WKT column (see functions/Wkt.scala).
+    * kept). Caller provides the WKT column (see functions/Wkt.scala). A
+    * nested (struct, array or map) column is written as its compact JSON
+    * text, as GeoPandas `to_csv` writes such values as text; Spark's CSV
+    * writer refuses nested types.
     */
   def writeCsvWkt(df: DataFrame, outDir: String, baseName: String, timestamp: String,
                   wkt: Column): String = {
     val path = s"$outDir/${baseName}_$timestamp.csv"
-    df.withColumn("geometry_wkt", wkt)
-      .drop("coordinates", "geometry_type")
+    val flat = df.withColumn("geometry_wkt", wkt).drop("coordinates", "geometry_type")
+    flat.select(flat.schema.fields.toSeq.map { f =>
+        f.dataType match {
+          case _: StructType | _: ArrayType | _: MapType => to_json(col(f.name), keepNulls).as(f.name)
+          case _ => col(f.name)
+        }
+      }: _*)
       .write.mode(SaveMode.Overwrite).option("header", "true").csv(path)
     path
   }

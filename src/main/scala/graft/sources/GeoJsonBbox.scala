@@ -24,7 +24,7 @@ object GeoJsonBbox {
   /** One pushed range predicate over a per-feature bbox column. `op` is one
     * of ">=", ">", "<=", "<" — evaluated EXACTLY (strictness preserved), so
     * the builder reports these filters as fully pushed and Spark plans no
-    * residual, keeping aggregate pushdown available under a spatial filter.
+    * residual Filter above the scan.
     */
   final case class BboxPred(field: String, op: String, value: Double) {
     private def cmp(x: Double): Boolean = op match {

@@ -1,10 +1,12 @@
 package graft.sources
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
+import com.fasterxml.jackson.databind.util.RawValue
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, ArrayData, GenericArrayData}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
@@ -105,6 +107,22 @@ object GeoJsonDataSource {
   def documents(inputs: Seq[String]): Seq[String] =
     inputs.flatMap(p => if (localFile(p).isDirectory) listDocs(p) else Seq(p))
 
+  /** A write's output directory as a local path: a bare path as given, a
+    * `file:` URI as its path. The writer commits through `java.io` (see
+    * [[GeoJsonWriteBuilder]]), so any other scheme is refused rather than
+    * written to a relative local directory named after the URI.
+    */
+  def localDir(path: String): String = {
+    val uri = new org.apache.hadoop.fs.Path(path).toUri
+    Option(uri.getScheme) match {
+      case None => path
+      case Some("file") => uri.getPath
+      case Some(scheme) => throw new IllegalArgumentException(
+        s"geojson write: $scheme: paths are not supported, the writer commits " +
+          s"through the local filesystem (got $path)")
+    }
+  }
+
   private def localFile(doc: String): java.io.File =
     new java.io.File(if (doc.startsWith("file:")) new java.net.URI(doc).getPath else doc)
 
@@ -189,7 +207,10 @@ class GeoJsonTable(options: CaseInsensitiveStringMap)
     java.util.EnumSet.of(TableCapability.BATCH_READ,
       TableCapability.MICRO_BATCH_READ,
       TableCapability.BATCH_WRITE, TableCapability.STREAMING_WRITE,
-      TableCapability.TRUNCATE)
+      TableCapability.TRUNCATE,
+      // the writer reads its input columns by name and ignores the rest
+      // (GeoJsonWriteBuilder), so a write need not carry the read schema
+      TableCapability.ACCEPT_ANY_SCHEMA)
   override def newScanBuilder(caseInsensitiveOptions: CaseInsensitiveStringMap): ScanBuilder = {
     val merged = new java.util.HashMap[String, String](options.asCaseSensitiveMap())
     merged.putAll(caseInsensitiveOptions.asCaseSensitiveMap())
@@ -197,8 +218,8 @@ class GeoJsonTable(options: CaseInsensitiveStringMap)
   }
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new GeoJsonWriteBuilder(
-      Option(info.options.get("path")).getOrElse(
-        throw new IllegalArgumentException("geojson write: missing path")),
+      GeoJsonDataSource.localDir(Option(info.options.get("path")).getOrElse(
+        throw new IllegalArgumentException("geojson write: missing path"))),
       info.schema())
 }
 
@@ -213,15 +234,16 @@ class GeoJsonTable(options: CaseInsensitiveStringMap)
   *   - `geometry_type = v` / `geometry_type IN (...)` — enforced inside the
   *     partition reader while iterating features, before any row is built.
   *
-  * Everything else is returned to Spark to evaluate post-scan.
+  * Everything else is returned to Spark to evaluate post-scan. Aggregates
+  * and LIMIT are not pushed: every document is fetched and parsed whole
+  * either way, so Spark's partial aggregate over the pruned row scan, and
+  * its `LocalLimit` that stops pulling a partition at N rows, do the same
+  * work without a second scan shape.
   */
 class GeoJsonScanBuilder(options: CaseInsensitiveStringMap)
     extends ScanBuilder with SupportsPushDownRequiredColumns
-    with org.apache.spark.sql.connector.read.SupportsPushDownFilters
-    with org.apache.spark.sql.connector.read.SupportsPushDownAggregates
-    with org.apache.spark.sql.connector.read.SupportsPushDownLimit {
+    with org.apache.spark.sql.connector.read.SupportsPushDownFilters {
   import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, IsNotNull, LessThan, LessThanOrEqual}
-  import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, CountStar}
 
   private var required: StructType = GeoJsonDataSource.Schema
   private var pushed: Array[Filter] = Array.empty
@@ -229,9 +251,6 @@ class GeoJsonScanBuilder(options: CaseInsensitiveStringMap)
   private var geomKeep: Option[Set[String]] = None
   private var geomNonNull = false
   private var bboxPreds: Seq[GeoJsonBbox.BboxPred] = Seq.empty
-  private var countStar = false
-  private var groupByGeom = false
-  private var limit: Option[Int] = None
 
   private def numVal(v: Any): Option[Double] = v match {
     case d: Double => Some(d)
@@ -241,44 +260,6 @@ class GeoJsonScanBuilder(options: CaseInsensitiveStringMap)
     case _ => None
   }
 
-  /** LIMIT pushdown, PARTIAL (per-document): each per-document reader stops
-    * building rows after `limit` matching features. It saves row building,
-    * not parsing: [[GeoJsonFetch.fetch]] reads the whole file and a
-    * FeatureCollection or bare array is read as one JSON tree before the
-    * first row. Declared partial so Spark keeps its global Limit above the
-    * scan (several documents each emit up to `limit` rows).
-    */
-  override def pushLimit(l: Int): Boolean = { limit = Some(l); true }
-  override def isPartiallyPushed(): Boolean = true
-
-  /** COUNT(*) pushdown (Spark only offers an aggregate here when every
-    * filter was fully pushed, which this builder guarantees for the shapes
-    * it accepts): the scan then emits ONE pre-counted row per document —
-    * features are tallied over the parsed document and no feature row,
-    * geometry array or property map is ever built. The document is still
-    * fetched and parsed whole, so this saves row building, not parsing.
-    * Partial pushdown: Spark still sums the per-document counts, so
-    * multi-document reads stay parallel.
-    */
-  override def pushAggregation(aggregation: Aggregation): Boolean = {
-    val aggs = aggregation.aggregateExpressions()
-    val gbs = aggregation.groupByExpressions()
-    val oneCountStar = aggs.length == 1 && aggs(0).isInstanceOf[CountStar]
-    countStar = gbs.isEmpty && oneCountStar
-    // GROUP BY geometry_type COUNT(*) — the reference viewer's categorical
-    // count — tallied over the parsed document into a per-type map (bounded
-    // by the handful of GeoJSON geometry types), one row per (document,
-    // type), no feature row ever built. Partial pushdown like the plain count:
-    // Spark sums the per-document tallies, so multi-document reads stay
-    // parallel and the final grouping is exact.
-    groupByGeom = !countStar && oneCountStar && gbs.length == 1 && (gbs(0) match {
-      case nr: org.apache.spark.sql.connector.expressions.NamedReference =>
-        nr.fieldNames.sameElements(Array("geometry_type"))
-      case _ => false
-    })
-    countStar || groupByGeom
-  }
-
   override def pruneColumns(requiredSchema: StructType): Unit = required = requiredSchema
 
   private def intersect(cur: Option[Set[String]], add: Set[String]): Option[Set[String]] =
@@ -286,8 +267,7 @@ class GeoJsonScanBuilder(options: CaseInsensitiveStringMap)
 
   // bbox range predicates are enforced EXACTLY per feature (strictness
   // preserved, null envelope never matches — SQL comparison semantics), so
-  // they count as fully pushed: no residual Filter, and aggregate pushdown
-  // stays available under a spatial predicate
+  // they count as fully pushed: no residual Filter above the scan
   private def bboxPredOf(f: Filter): Option[GeoJsonBbox.BboxPred] = f match {
     case GreaterThanOrEqual(c, v) if GeoJsonBbox.Fields(c) =>
       numVal(v).map(GeoJsonBbox.BboxPred(c, ">=", _))
@@ -307,8 +287,7 @@ class GeoJsonScanBuilder(options: CaseInsensitiveStringMap)
       case In("geometry_type", vs) => vs.forall(_.isInstanceOf[String])
       // Catalyst adds implied IsNotNull alongside every equality — accept
       // them too (source_file is never null; geometry-null features are
-      // dropped in the reader), or the leftover residual Filter would block
-      // aggregate pushdown for filtered counts
+      // dropped in the reader), or a residual Filter would re-check every row
       case IsNotNull("source_file") | IsNotNull("geometry_type") => true
       // implied alongside every bbox range comparison; "has an envelope" ⟺
       // "has a geometry with coordinates", enforced with the range preds
@@ -322,6 +301,7 @@ class GeoJsonScanBuilder(options: CaseInsensitiveStringMap)
       case EqualTo("geometry_type", v: String) => geomKeep = intersect(geomKeep, Set(v))
       case In("geometry_type", vs) =>
         geomKeep = intersect(geomKeep, vs.map(_.asInstanceOf[String]).toSet)
+      // a bare IsNotNull(geometry_type) is enforced as "has a geometry at all"
       case IsNotNull("geometry_type") => geomNonNull = true
       case IsNotNull(c) if GeoJsonBbox.Fields(c) =>
         // enforced as "envelope exists": matched by requiring env.nonEmpty,
@@ -334,149 +314,15 @@ class GeoJsonScanBuilder(options: CaseInsensitiveStringMap)
   }
   override def pushedFilters(): Array[Filter] = pushed
 
-  // a bare IsNotNull(geometry_type) with no equality is enforced as
-  // "has a geometry at all" — matches() with an empty keep-set constraint
-  private def effectiveGeomKeep: (Option[Set[String]], Boolean) = (geomKeep, geomNonNull)
-
-  override def build(): Scan = {
-    val (gk, gnn) = effectiveGeomKeep
-    def docs = GeoJsonDataSource.documents(GeoJsonDataSource.inputs(options))
-    if (countStar)
-      new GeoJsonCountScan(docs, fileKeep, gk, gnn, bboxPreds)
-    else if (groupByGeom)
-      new GeoJsonGroupCountScan(docs, fileKeep, gk, gnn, bboxPreds)
-    else
-      new GeoJsonScan(GeoJsonDataSource.inputs(options), required, fileKeep, gk, gnn, limit,
-        bboxPreds)
-  }
-}
-
-/** The COUNT(*)-pushed scan: same document pruning and packing as the row
-  * scan, but each partition returns one row per packed document holding that
-  * document's matching-feature count. The schema is the aggregation's output
-  * schema (one non-null LONG), which is what `SupportsPushDownAggregates`
-  * requires of a partial pushdown.
-  */
-class GeoJsonCountScan(paths: Seq[String], fileKeep: Option[Set[String]],
-                       geomKeep: Option[Set[String]],
-                       geomNonNull: Boolean = false,
-                       bboxPreds: Seq[GeoJsonBbox.BboxPred] = Seq.empty)
-    extends Scan with Batch {
-  override def readSchema(): StructType =
-    new StructType().add("count(*)", LongType, nullable = false)
-  override def toBatch: Batch = this
-  private def prunedPaths: Seq[String] =
-    GeoJsonDataSource.prune(paths, Seq(fileKeep), bboxPreds)
-  override def planInputPartitions(): Array[InputPartition] =
-    GeoJsonDataSource.pack(prunedPaths)
-  override def createReaderFactory(): PartitionReaderFactory =
-    new GeoJsonCountReaderFactory(geomKeep, geomNonNull, bboxPreds)
-  override def description(): String =
-    s"GeoJsonCountScan docs=${prunedPaths.size}/${paths.size} pushed=COUNT(*)" +
-      geomKeep.fold("")(g => s" geometry_type IN ${g.mkString("(", ",", ")")}") +
-      (if (bboxPreds.isEmpty) "" else s" bbox=${bboxPreds.size} preds")
-}
-
-class GeoJsonCountReaderFactory(geomKeep: Option[Set[String]],
-                                geomNonNull: Boolean = false,
-                                bboxPreds: Seq[GeoJsonBbox.BboxPred] = Seq.empty)
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new GeoJsonDocsReader(partition,
-      new GeoJsonCountReader(_, geomKeep, geomNonNull, bboxPreds))
-}
-
-/** Counts matching features in one document without building any row. */
-class GeoJsonCountReader(path: String, geomKeep: Option[Set[String]],
-                         geomNonNull: Boolean = false,
-                         bboxPreds: Seq[GeoJsonBbox.BboxPred] = Seq.empty)
-    extends PartitionReader[InternalRow] {
-  private var count = 0L
-  private var emitted = false
-  override def next(): Boolean =
-    if (emitted) false
-    else {
-      GeoJsonFeatures.iterate(path)
-        .foreach(f => if (GeoJsonFeatures.matches(f, geomKeep, geomNonNull, bboxPreds)) count += 1)
-      emitted = true
-      true
-    }
-  override def get(): InternalRow = new GenericInternalRow(Array[Any](count))
-  override def close(): Unit = ()
-}
-
-/** The GROUP BY geometry_type COUNT(*)-pushed scan: same document pruning and
-  * packing as the row scan; each partition returns one row per geometry type
-  * seen in each of its documents (null included — a feature with no geometry
-  * groups under null exactly as the row scan + aggregate would). Output schema
-  * is the grouping column followed by the count, the layout
-  * `SupportsPushDownAggregates` requires of a partial group-by pushdown.
-  */
-class GeoJsonGroupCountScan(paths: Seq[String], fileKeep: Option[Set[String]],
-                            geomKeep: Option[Set[String]],
-                            geomNonNull: Boolean = false,
-                            bboxPreds: Seq[GeoJsonBbox.BboxPred] = Seq.empty)
-    extends Scan with Batch {
-  override def readSchema(): StructType =
-    new StructType().add("geometry_type", StringType)
-      .add("count(*)", LongType, nullable = false)
-  override def toBatch: Batch = this
-  private def prunedPaths: Seq[String] =
-    GeoJsonDataSource.prune(paths, Seq(fileKeep), bboxPreds)
-  override def planInputPartitions(): Array[InputPartition] =
-    GeoJsonDataSource.pack(prunedPaths)
-  override def createReaderFactory(): PartitionReaderFactory =
-    new GeoJsonGroupCountReaderFactory(geomKeep, geomNonNull, bboxPreds)
-  override def description(): String =
-    s"GeoJsonGroupCountScan docs=${prunedPaths.size}/${paths.size} " +
-      "pushed=GROUP BY geometry_type COUNT(*)" +
-      geomKeep.fold("")(g => s" geometry_type IN ${g.mkString("(", ",", ")")}")
-}
-
-class GeoJsonGroupCountReaderFactory(geomKeep: Option[Set[String]],
-                                     geomNonNull: Boolean = false,
-                                     bboxPreds: Seq[GeoJsonBbox.BboxPred] = Seq.empty)
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new GeoJsonDocsReader(partition,
-      new GeoJsonGroupCountReader(_, geomKeep, geomNonNull, bboxPreds))
-}
-
-/** Tallies matching features per geometry type in one document without
-  * building any feature row; emission order is first-seen (deterministic for
-  * a given document — Spark's final aggregate owns the global order anyway).
-  */
-class GeoJsonGroupCountReader(path: String, geomKeep: Option[Set[String]],
-                              geomNonNull: Boolean = false,
-                              bboxPreds: Seq[GeoJsonBbox.BboxPred] = Seq.empty)
-    extends PartitionReader[InternalRow] {
-  private var rows: Iterator[InternalRow] = _
-  private var current: InternalRow = _
-  override def next(): Boolean = {
-    if (rows == null) {
-      val tally = new java.util.LinkedHashMap[Option[String], Long]()
-      GeoJsonFeatures.iterate(path).foreach { f =>
-        if (GeoJsonFeatures.matches(f, geomKeep, geomNonNull, bboxPreds)) {
-          tally.merge(GeoJsonFeatures.geometryType(f), 1L, (a, b) => a + b)
-        }
-      }
-      rows = tally.entrySet().iterator().asScala.map { e =>
-        val gt: Any = e.getKey
-          .map(org.apache.spark.unsafe.types.UTF8String.fromString).orNull
-        new GenericInternalRow(Array[Any](gt, e.getValue)): InternalRow
-      }
-    }
-    if (rows.hasNext) { current = rows.next(); true } else false
-  }
-  override def get(): InternalRow = current
-  override def close(): Unit = ()
+  override def build(): Scan =
+    new GeoJsonScan(GeoJsonDataSource.inputs(options), required, fileKeep, geomKeep, geomNonNull,
+      bboxPreds)
 }
 
 class GeoJsonScan(paths: Seq[String], required: StructType,
                   fileKeep: Option[Set[String]] = None,
                   geomKeep: Option[Set[String]] = None,
                   geomNonNull: Boolean = false,
-                  limit: Option[Int] = None,
                   bboxPreds: Seq[GeoJsonBbox.BboxPred] = Seq.empty)
     extends Scan with Batch with SupportsReportStatistics
     with SupportsRuntimeFiltering {
@@ -535,11 +381,10 @@ class GeoJsonScan(paths: Seq[String], required: StructType,
   override def planInputPartitions(): Array[InputPartition] =
     GeoJsonDataSource.pack(prunedPaths)
   override def createReaderFactory(): PartitionReaderFactory =
-    new GeoJsonReaderFactory(required, geomKeep, geomNonNull, limit, bboxPreds)
+    new GeoJsonReaderFactory(required, geomKeep, geomNonNull, bboxPreds)
   override def description(): String =
     s"GeoJsonScan docs=${prunedPaths.size}/${docs.size}" +
       geomKeep.fold("")(g => s" geometry_type IN ${g.mkString("(", ",", ")")}") +
-      limit.fold("")(l => s" limit=$l") +
       (if (bboxPreds.isEmpty) "" else s" bbox=${bboxPreds.size} preds")
   override def toMicroBatchStream(checkpointLocation: String):
       org.apache.spark.sql.connector.read.streaming.MicroBatchStream = {
@@ -553,9 +398,9 @@ class GeoJsonScan(paths: Seq[String], required: StructType,
 case class GeoJsonInputPartition(docs: Seq[String]) extends InputPartition
 
 /** Walks a packed partition's documents in order, one per-document reader at
-  * a time, so `feature_idx`, `source_file`, the pushed filters, the LIMIT cap
-  * and the COUNT / GROUP BY tallies keep their per-document meaning. A
-  * document is fetched only when the walk reaches it.
+  * a time, so `feature_idx` and `source_file` keep their per-document
+  * meaning. A document is fetched only when the walk reaches it, so a
+  * `LocalLimit` that stops pulling the partition leaves the rest unread.
   */
 class GeoJsonDocsReader(partition: InputPartition,
                         open: String => PartitionReader[InternalRow])
@@ -581,10 +426,11 @@ class GeoJsonDocsReader(partition: InputPartition,
   * so batch and stream see identical rows for identical documents.
   *
   * Offset model: a lexicographic filename watermark. The queue contract is
-  * that producers name files in monotonically increasing order (timestamped
-  * names — exactly what [[graft.sinks.Sinks.writeGeoJson]] emits); a file
-  * sorting below the committed watermark would be ignored, the same contract
-  * every name-ordered file queue has. Listing runs on the driver per batch
+  * that producers drop documents (files, not directories: the listing skips
+  * a directory such as [[graft.sinks.Sinks.writeGeoJson]]'s output) named in
+  * monotonically increasing order, e.g. by timestamp; a file sorting below
+  * the committed watermark would be ignored, the same contract every
+  * name-ordered file queue has. Listing runs on the driver per batch
   * (one directory listing — no data), parsing runs on executors.
   */
 class GeoJsonMicroBatchStream(dir: String, required: StructType)
@@ -623,16 +469,40 @@ case class GeoJsonStreamOffset(watermark: String)
   *
   * Deployment constraint: tasks write and the driver moves through
   * `java.io` paths, which is only correct when driver and executors share a
-  * filesystem (local mode, NFS). On a multi-node cluster with per-node local
-  * disks the driver-side move would find no temp files — a cluster port
-  * should route these file ops through the Hadoop FileSystem API against a
-  * shared scheme (hdfs:/s3:), as the sibling parquet-based sinks already do.
-  * Input rows must carry the connector's normalized schema (geometry_type,
-  * parts, properties; other columns are ignored), so `read → transform →
-  * write` round-trips through `format("geojson")` symmetrically.
+  * filesystem (local mode, NFS). The output path is a bare path or a `file:`
+  * URI; any other scheme (`hdfs:`, `s3a:`) is refused when the write is
+  * planned ([[GeoJsonDataSource.localDir]]). A cluster port should route
+  * these file ops, the `.bbox` sidecars and the reader's listing through the
+  * Hadoop FileSystem API, as the sibling parquet-based sinks already do.
+  *
+  * Input columns are read by name, in the connector's read types, and any
+  * other column is ignored (the table accepts any schema), so both `read →
+  * transform → write` and a sink's own projection write through
+  * `format("geojson")`:
+  *   - `geometry_type` — the geometry's type (LineString when absent or null);
+  *   - `parts` — its coordinates in the reader's multi-part form; a null or
+  *     absent `parts` writes `"geometry": null`, which reads back as null
+  *     `geometry_type` and `parts`;
+  *   - `properties_json` — the properties object as JSON text, written
+  *     verbatim so values keep their JSON types (null when absent or null).
+  * The `properties` map is never written: it holds every value as a string,
+  * so writing it would turn `12` into `"12"`. An input that carries it
+  * without `properties_json` is refused; one that carries both writes
+  * `properties_json` and ignores the map, so a transform that edits the
+  * properties must rebuild `properties_json` before the write.
   */
 class GeoJsonWriteBuilder(path: String, schema: StructType)
     extends WriteBuilder with SupportsTruncate {
+  Seq("geometry_type", "parts", "properties_json").foreach { c =>
+    schema.find(_.name == c).foreach { f =>
+      val want = GeoJsonDataSource.Schema(c).dataType
+      require(DataType.equalsStructurally(f.dataType, want, ignoreNullability = true),
+        s"geojson write: column $c is ${f.dataType.simpleString}, expected ${want.simpleString}")
+    }
+  }
+  require(!schema.fieldNames.contains("properties") || schema.fieldNames.contains("properties_json"),
+    "geojson write: the properties map holds every value as a string; " +
+      "write the properties_json column to keep the values' types")
   private var truncateFirst = false
   override def truncate(): WriteBuilder = { truncateFirst = true; this }
   override def build(): Write = new Write {
@@ -700,10 +570,12 @@ class GeoJsonBatchWrite(path: String, schema: StructType, truncateFirst: Boolean
   }
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     // task ids differ between jobs, so overwrite must REMOVE the previous
-    // job's part files — REPLACE_EXISTING alone would union the two writes
+    // job's part files and their sidecars — REPLACE_EXISTING alone would
+    // union the two writes
     if (truncateFirst)
       Option(new java.io.File(path).listFiles()).getOrElse(Array.empty)
-        .filter(f => f.isFile && f.getName.startsWith("part-")).foreach(_.delete())
+        .filter(f => f.isFile && (f.getName.startsWith("part-") || f.getName.startsWith(".part-")))
+        .foreach(_.delete())
     messages.foreach { case GeoJsonCommitMessage(tmp, fin, bbox) =>
       val dst = new java.io.File(path, fin)
       java.nio.file.Files.move(new java.io.File(tmp).toPath, dst.toPath,
@@ -765,52 +637,44 @@ class GeoJsonDataWriter(path: String, schema: StructType, tmpName: String, final
   override def write(row: InternalRow): Unit = {
     val doc = mapper.createObjectNode()
     doc.put("type", "Feature")
-    val geom = doc.putObject("geometry")
+    idx.get("parts").filterNot(row.isNullAt) match {
+      case Some(i) => geometryInto(doc.putObject("geometry"), row, row.getArray(i))
+      case None => doc.putNull("geometry")
+    }
+    idx.get("properties_json").filterNot(row.isNullAt) match {
+      case Some(i) => doc.putRawValue("properties", new RawValue(row.getUTF8String(i).toString))
+      case None => doc.putNull("properties")
+    }
+    out.write(doc.toString)
+    out.newLine()
+  }
+
+  /** The non-null entries of an array of arrays (a null part or point,
+    * which no reader emits, is skipped rather than dereferenced).
+    */
+  private def arrays(a: ArrayData): Seq[ArrayData] =
+    (0 until a.numElements()).filterNot(a.isNullAt).map(a.getArray)
+
+  private def geometryInto(geom: ObjectNode, row: InternalRow, parts: ArrayData): Unit = {
     val gType = idx.get("geometry_type")
       .filterNot(row.isNullAt).map(i => row.getUTF8String(i).toString).getOrElse("LineString")
     geom.put("type", gType)
     val coords = geom.putArray("coordinates")
-    idx.get("parts").filterNot(row.isNullAt).foreach { i =>
-      val parts = row.getArray(i)
-      def lineInto(arr: com.fasterxml.jackson.databind.node.ArrayNode,
-                   part: org.apache.spark.sql.catalyst.util.ArrayData): Unit =
-        (0 until part.numElements()).foreach { p =>
-          val pt = part.getArray(p)
-          val ptNode = arr.addArray()
-          (0 until pt.numElements()).foreach(k => ptNode.add(pt.getDouble(k)))
-          if (pt.numElements() >= 2) growEnv(pt.getDouble(0), pt.getDouble(1))
-        }
-      gType match {
-        case "Point" =>
-          val pt = parts.getArray(0).getArray(0)
-          (0 until pt.numElements()).foreach(k => coords.add(pt.getDouble(k)))
-          if (pt.numElements() >= 2) growEnv(pt.getDouble(0), pt.getDouble(1))
-        case "LineString" | "MultiPoint" =>
-          lineInto(coords, parts.getArray(0))
-        case "MultiPolygon" =>
-          // the reader flattened polygons to rings; emit each ring as a
-          // one-ring polygon (4-deep coordinates) so the output re-reads
-          // through the same MultiPolygon branch symmetrically
-          (0 until parts.numElements()).foreach { j =>
-            lineInto(coords.addArray().addArray(), parts.getArray(j))
-          }
-        case _ => // MultiLineString / Polygon rings
-          (0 until parts.numElements()).foreach { j =>
-            lineInto(coords.addArray(), parts.getArray(j))
-          }
-      }
+    def pointInto(arr: ArrayNode, pt: ArrayData): Unit = {
+      (0 until pt.numElements()).foreach(k => arr.add(pt.getDouble(k)))
+      if (pt.numElements() >= 2) growEnv(pt.getDouble(0), pt.getDouble(1))
     }
-    val props = doc.putObject("properties")
-    idx.get("properties").filterNot(row.isNullAt).foreach { i =>
-      val m = row.getMap(i)
-      (0 until m.numElements()).foreach { k =>
-        val key = m.keyArray().getUTF8String(k).toString
-        if (m.valueArray().isNullAt(k)) props.putNull(key)
-        else props.put(key, m.valueArray().getUTF8String(k).toString)
-      }
+    def lineInto(arr: ArrayNode, part: ArrayData): Unit =
+      arrays(part).foreach(pointInto(arr.addArray(), _))
+    gType match {
+      case "Point" => arrays(parts).flatMap(arrays).headOption.foreach(pointInto(coords, _))
+      case "LineString" | "MultiPoint" => arrays(parts).headOption.foreach(lineInto(coords, _))
+      // the reader flattened polygons to rings; emit each ring as a one-ring
+      // polygon (4-deep coordinates) so the output re-reads through the same
+      // MultiPolygon branch symmetrically
+      case "MultiPolygon" => arrays(parts).foreach(lineInto(coords.addArray().addArray(), _))
+      case _ => arrays(parts).foreach(lineInto(coords.addArray(), _)) // MultiLineString / Polygon rings
     }
-    out.write(doc.toString)
-    out.newLine()
   }
 
   override def commit(): WriterCommitMessage = {
@@ -823,17 +687,16 @@ class GeoJsonDataWriter(path: String, schema: StructType, tmpName: String, final
 class GeoJsonReaderFactory(required: StructType,
                            geomKeep: Option[Set[String]] = None,
                            geomNonNull: Boolean = false,
-                           limit: Option[Int] = None,
                            bboxPreds: Seq[GeoJsonBbox.BboxPred] = Seq.empty)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new GeoJsonDocsReader(partition,
-      new GeoJsonPartitionReader(_, required, geomKeep, geomNonNull, limit, bboxPreds))
+      new GeoJsonPartitionReader(_, required, geomKeep, geomNonNull, bboxPreds))
 }
 
-/** Shared document → feature iteration and pushed-filter match, used by both
-  * the row reader and the count reader so the two paths can never disagree
-  * about what a feature is.
+/** Shared document → feature iteration and pushed-filter match, used by the
+  * row reader and the `.bbox` indexer so the two can never disagree about
+  * what a feature is.
   */
 private[sources] object GeoJsonFeatures {
   /** A source document may be ONE value (FeatureCollection / Feature /
@@ -853,9 +716,8 @@ private[sources] object GeoJsonFeatures {
 
   /** Geometry type of a feature: None when the geometry is absent, JSON
     * null, or lacks a "type" field. The single accessor shared by filter
-    * matching, the row reader and the group-count reader — a malformed
-    * feature degrades to a null type everywhere instead of NPE-aborting
-    * one reader's whole partition.
+    * matching and the row reader — a malformed feature degrades to a null
+    * type everywhere instead of NPE-aborting the reader's whole partition.
     */
   def geometryType(f: JsonNode): Option[String] =
     Option(f.get("geometry")).filterNot(_.isNull)
@@ -888,18 +750,12 @@ private[sources] object GeoJsonFeatures {
 class GeoJsonPartitionReader(path: String, required: StructType,
                              geomKeep: Option[Set[String]] = None,
                              geomNonNull: Boolean = false,
-                             limit: Option[Int] = None,
                              bboxPreds: Seq[GeoJsonBbox.BboxPred] = Seq.empty)
     extends PartitionReader[InternalRow] {
 
   // whether any requested column needs the feature envelope — computed once,
   // so envelope-free scans never pay the coordinate walk
   private val needEnv = required.fieldNames.exists(GeoJsonBbox.Fields.contains)
-
-  // rows emitted so far — the pushed-limit cap. The document was fetched
-  // whole and a FeatureCollection or array parsed as one tree, so the cap
-  // saves building rows, not reading the document.
-  private var emitted = 0L
 
   private val fileName = path.split('/').last
   private val features: Iterator[(JsonNode, Long)] =
@@ -965,11 +821,10 @@ class GeoJsonPartitionReader(path: String, required: StructType,
   }
 
   override def next(): Boolean = {
-    if (limit.exists(emitted >= _)) return false
     while (features.hasNext) {
       val (f, i) = features.next()
       if (GeoJsonFeatures.matches(f, geomKeep, geomNonNull, bboxPreds)) {
-        current = toRow(f, i); emitted += 1; return true
+        current = toRow(f, i); return true
       }
     }
     false

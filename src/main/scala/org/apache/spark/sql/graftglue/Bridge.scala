@@ -1,7 +1,8 @@
 package org.apache.spark.sql.graftglue
 
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias}
 import org.apache.spark.sql.classic.{Dataset => CDataset, SparkSession => CSparkSession}
 
 /** Minimal access layer to `private[sql]` constructors, for turning a custom
@@ -14,6 +15,22 @@ object Bridge {
   /** Wrap a (resolved) logical plan as a DataFrame on the given session. */
   def ofRows(session: org.apache.spark.sql.SparkSession, plan: LogicalPlan): DataFrame =
     CDataset.ofRows(session.asInstanceOf[CSparkSession], plan)
+
+  /** SQL text run over DataFrames rather than the session catalog: each
+    * table name in `tables` (including inside subqueries such as a LATERAL
+    * one) resolves to its DataFrame's plan under that name as alias, so
+    * building the query registers no temp view and a user table of the same
+    * name is never shadowed. Names not in `tables` resolve as usual.
+    */
+  def sqlOver(session: org.apache.spark.sql.SparkSession, text: String,
+              tables: (String, DataFrame)*): DataFrame = {
+    val byName = tables.toMap
+    val parsed = session.asInstanceOf[CSparkSession].sessionState.sqlParser.parsePlan(text)
+    ofRows(session, parsed.transformUpWithSubqueries {
+      case r: UnresolvedRelation if byName.contains(r.tableName) =>
+        SubqueryAlias(r.tableName, analyzed(byName(r.tableName)))
+    })
+  }
 
   /** The analyzed logical plan behind a DataFrame. */
   def analyzed(df: DataFrame): LogicalPlan =

@@ -106,44 +106,38 @@ class ContractSpec extends SparkSpec {
     "q_winsorize" -> Map("events" -> 2)
   )
 
-  /** Queries whose builder leaves session temp views behind, with the view
-    * names. A builder that writes the catalog shadows any user table of the
-    * same name, and two threads building at different scale factors on one
-    * session race on it; this list may only shrink. */
-  private val TempViewWriters: Map[String, Set[String]] = Map(
-    "q_cube" -> Set("customer", "nation", "orders", "region"),
-    "q_grouping_sets" -> Set("events"),
-    "q_lateral" -> Set("customer", "orders"),
-    "q_rollup" -> Set("customer", "nation", "orders", "region")
-  )
-
-  // also pins RepeatedFactScans and TempViewWriters off the same plan
-  // builds, so neither audit costs extra query runs
+  // also pins RepeatedFactScans, and checks that no builder writes the
+  // session catalog, off the same plan builds, so neither audit costs extra
+  // query runs. A builder that registers a view shadows any user table of
+  // the same name, and two threads building at different scale factors on
+  // one session race on it.
   test("no query plan contains a cartesian product") {
     val d = sf()
     val facts = Seq("lineitem", "events", "documents", "embeddings", "orders")
-    def tempViews = spark.catalog.listTables().collect().filter(_.isTemporary).map(_.name).toSet
+    def catalog = (spark.catalog.listTables().collect() ++
+      spark.catalog.listTables("global_temp").collect()).map(_.toString).toSet
     val audits = SparkEntry.queries.toSeq.map { case (name, fn) =>
       // a plan cached by an earlier query or suite must not stand in for a
-      // scan, and a view an earlier builder left must not be charged to this one
+      // scan, and a view an earlier build left must not hide this one's write
       spark.catalog.clearCache()
-      tempViews.foreach(spark.catalog.dropTempView)
+      spark.catalog.listTables().collect().filter(_.isTemporary)
+        .foreach(t => spark.catalog.dropTempView(t.name))
+      val before = catalog
       val physical = fn(spark, d).queryExecution.executedPlan.toString
       assert(!physical.contains("CartesianProduct"), s"$name has a CartesianProduct:\n$physical")
       val scans = facts.map(f => f -> s"/$f\\.parquet".r.findAllIn(physical).length)
         .filter(_._2 > 1).toMap
-      (name, scans, tempViews)
+      (name, scans, (catalog -- before) ++ (before -- catalog))
     }
     val repeated = audits.collect { case (name, scans, _) if scans.nonEmpty => name -> scans }.toMap
     val changed = (repeated.keySet ++ RepeatedFactScans.keySet).toSeq.sorted
       .filter(n => repeated.get(n) != RepeatedFactScans.get(n))
       .map(n => s"$n: pinned ${RepeatedFactScans.get(n)}, planned ${repeated.get(n)}")
     assert(changed.isEmpty, s"repeated fact-table scans changed:\n${changed.mkString("\n")}")
-    val writers = audits.collect { case (name, _, views) if views.nonEmpty => name -> views }.toMap
-    val newWriters = (writers.keySet ++ TempViewWriters.keySet).toSeq.sorted
-      .filter(n => writers.get(n) != TempViewWriters.get(n))
-      .map(n => s"$n: pinned ${TempViewWriters.get(n)}, left ${writers.get(n)}")
-    assert(newWriters.isEmpty, s"temp views left by query builders changed:\n${newWriters.mkString("\n")}")
+    val writers = audits.collect { case (name, _, changed) if changed.nonEmpty =>
+      s"$name: ${changed.toSeq.sorted.mkString(", ")}"
+    }
+    assert(writers.isEmpty, s"query builders changed the session catalog:\n${writers.mkString("\n")}")
   }
 
   test("no query emits a DECIMAL output column") {

@@ -3,7 +3,7 @@ package graft
 import graft.sources.{GeoJson, GeoJsonInputPartition}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
-import org.apache.spark.sql.functions.{broadcast, col}
+import org.apache.spark.sql.functions.{array, broadcast, col, explode, lit, transform_values}
 import java.nio.file.Files
 
 class GeoJsonSourceSpec extends SparkSpec {
@@ -30,7 +30,7 @@ class GeoJsonSourceSpec extends SparkSpec {
     // row path: null geometry_type, parts fall through to empty
     val types = df.select("geometry_type").collect().map(r => Option(r.getString(0))).toSet
     assert(types == Set(Some("LineString"), None))
-    // group-count path (aggregate pushdown) tallies the typeless feature
+    // the grouped count tallies the typeless feature under null
     val counts = df.groupBy("geometry_type").count().collect()
       .map(r => Option(r.getString(0)) -> r.getLong(1)).toMap
     assert(counts == Map(Option("LineString") -> 1L, Option.empty[String] -> 1L))
@@ -118,6 +118,65 @@ class GeoJsonSourceSpec extends SparkSpec {
     assert(math.abs(len("MultiLineString") - 1100.0) < 1e-9)
   }
 
+  test("a write of only geometry_type, parts and properties_json re-reads") {
+    val fc = tmpFile("fc9.json", s"""{"type": "FeatureCollection", "features": [$feature, $multiFeature]}""")
+    val outDir = Files.createTempDirectory("gjw3").toString + "/out"
+    val df = spark.read.format("geojson").load(fc)
+    df.select("geometry_type", "parts", "properties_json")
+      .write.format("geojson").mode("overwrite").save(outDir)
+    val back = spark.read.format("geojson").load(outDir)
+    def rows(d: DataFrame) =
+      d.select("geometry_type", "parts", "properties_json").collect().map(_.toString).toSet
+    assert(rows(back) == rows(df))
+    // the properties map alone would write every value as a string
+    val ex = intercept[IllegalArgumentException] {
+      df.select("geometry_type", "parts", "properties")
+        .write.format("geojson").mode("overwrite").save(outDir)
+    }
+    assert(ex.getMessage.contains("properties_json"), ex.getMessage)
+  }
+
+  test("property values keep their JSON types through a write") {
+    val typed = feature.replace(
+      """{"route_id": "R1", "local_authority": "Edinburgh", "route_type": "Cycle Lane"}""",
+      """{"id": 12, "x": 1.5}""")
+    val outDir = Files.createTempDirectory("gjw4").toString + "/out"
+    spark.read.format("geojson").load(tmpFile("typed.json", typed))
+      .write.format("geojson").mode("overwrite").save(outDir)
+    val back = spark.read.format("geojson").load(outDir)
+    assert(back.select("properties_json").head().getString(0) == """{"id":12,"x":1.5}""")
+  }
+
+  test("a feature without geometry writes a null geometry; null parts and points are skipped") {
+    val bare = """{"type": "Feature", "properties": {"route_id": "R0"}, "geometry": null}"""
+    val fc = tmpFile("nogeom.json", s"""{"type": "FeatureCollection", "features": [$feature, $bare]}""")
+    val outDir = Files.createTempDirectory("gjw5").toString + "/out"
+    val df = spark.read.format("geojson").load(fc)
+    df.write.format("geojson").mode("overwrite").save(outDir)
+    def rows(d: DataFrame) =
+      d.select("geometry_type", "parts", "properties_json").collect().map(_.toString).toSet
+    assert(rows(spark.read.format("geojson").load(outDir)) == rows(df))
+    // a part or point that is null inside `parts` is left out, not dereferenced
+    val holes = spark.range(1).select(
+      explode(array(lit("Point"), lit("LineString"), lit("MultiLineString"))).as("geometry_type"),
+      array(lit(null).cast("array<array<double>>"),
+        array(lit(null).cast("array<double>"), array(lit(1.0), lit(2.0)))).as("parts"))
+    holes.write.format("geojson").mode("overwrite").save(outDir)
+    val back = spark.read.format("geojson").load(outDir).select("geometry_type", "parts").collect()
+      .map(r => r.getString(0) -> r.getSeq[collection.Seq[collection.Seq[Double]]](1)).toMap
+    val one = Seq(Seq(Seq(1.0, 2.0)))
+    assert(back == Map("Point" -> one, "LineString" -> one, "MultiLineString" -> one), back)
+  }
+
+  test("a write that carries both properties forms writes properties_json, not the map") {
+    val outDir = Files.createTempDirectory("gjw6").toString + "/out"
+    spark.read.format("geojson").load(tmpFile("both.json", feature))
+      .withColumn("properties", transform_values(col("properties"), (_, _) => lit("EDITED")))
+      .write.format("geojson").mode("overwrite").save(outDir)
+    val back = spark.read.format("geojson").load(outDir)
+    assert(back.select(col("properties")("route_id")).head().getString(0) == "R1")
+  }
+
   private val pointFeature =
     """{"type": "Feature", "properties": {"route_id": "P1"},
       | "geometry": {"type": "Point", "coordinates": [100.0, 200.0]}}""".stripMargin
@@ -189,25 +248,12 @@ class GeoJsonSourceSpec extends SparkSpec {
     assert(df.select("feature_idx").collect().map(_.getLong(0)).sorted.toSeq == Seq(0L, 2L))
   }
 
-  test("LIMIT pushes into the scan: the reader stops parsing at the cap") {
+  test("LIMIT over the row scan returns N rows, with and without a pushed filter") {
     val doc = tmpFile("many.json",
       s"""{"type": "FeatureCollection", "features": [${Seq.fill(6)(feature).mkString(",")}]}""")
     val df = spark.read.format("geojson").load(doc).limit(2)
     assert(df.count() == 2)
-    // the pushed cap is visible on the scan; Spark's global Limit stays
-    // above it (partial pushdown — several documents each emit up to N)
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("limit=2"), s"expected pushed limit in:\n$plan")
-    // reader-level: next() refuses to advance once the cap is reached, so
-    // no row past it is built (the document itself was fetched and parsed
-    // whole)
-    val reader = new graft.sources.GeoJsonPartitionReader(
-      doc, graft.sources.GeoJsonDataSource.Schema, limit = Some(2))
-    var n = 0
-    while (reader.next()) n += 1
-    assert(n == 2, s"reader emitted $n rows past its cap")
-    // limit composes with a pushed reader filter: the cap counts MATCHING
-    // features (Spark's own limit would otherwise see too few rows)
+    // limit composes with a pushed reader filter: it counts MATCHING features
     val mixed = tmpFile("mixed_lim.json",
       s"""{"type": "FeatureCollection", "features": [$pointFeature, $feature, $pointFeature, $feature, $feature]}""")
     val filtered = spark.read.format("geojson").load(mixed)
@@ -216,7 +262,7 @@ class GeoJsonSourceSpec extends SparkSpec {
     assert(filtered.select("geometry_type").collect().forall(_.getString(0) == "LineString"))
   }
 
-  test("GROUP BY geometry_type COUNT(*) pushes into the scan as a per-type tally") {
+  test("GROUP BY geometry_type COUNT(*) over the row scan keeps the null group") {
     val a = tmpFile("g1.json",
       s"""{"type": "FeatureCollection", "features": [$feature, $pointFeature, $feature]}""")
     val b = tmpFile("g2.json",
@@ -225,15 +271,13 @@ class GeoJsonSourceSpec extends SparkSpec {
       .groupBy("geometry_type").count()
     val got = df.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(got == Map("LineString" -> 2L, "Point" -> 2L), s"wrong tallies: $got")
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("GeoJsonGroupCountScan"), s"group-by count not pushed:\n$plan")
     // composes with document pruning — only g1 parsed
     val pruned = spark.read.format("geojson").load(a, b)
       .filter(col("source_file") === "g1.json").groupBy("geometry_type").count()
     assert(pruned.collect().map(r => r.getString(0) -> r.getLong(1)).toMap ==
       Map("LineString" -> 2L, "Point" -> 1L))
     assert(pruned.queryExecution.executedPlan.toString.contains("docs=1/2"),
-      "document pruning lost under group-by count pushdown")
+      "document pruning lost under a grouped count")
     // a feature with NO geometry groups under null, exactly like the row path
     val withNull = tmpFile("g3.json",
       s"""{"type": "FeatureCollection", "features": [$feature, {"type": "Feature", "geometry": null, "properties": {}}]}""")
@@ -241,30 +285,25 @@ class GeoJsonSourceSpec extends SparkSpec {
       .groupBy("geometry_type").count()
     val gotNull = nulled.collect().map(r => Option(r.getString(0)) -> r.getLong(1)).toMap
     assert(gotNull == Map(Some("LineString") -> 1L, None -> 1L), s"null group wrong: $gotNull")
-    assert(nulled.queryExecution.executedPlan.toString.contains("GeoJsonGroupCountScan"))
   }
 
-  test("COUNT(*) pushes into the scan: tallied during parse, no rows materialized") {
+  test("COUNT(*) over the row scan honours pushed geometry and document filters") {
     val a = tmpFile("c1.json", s"""{"type": "FeatureCollection", "features": [$feature, $feature]}""")
     val b = tmpFile("c2.json", s"""{"type": "FeatureCollection", "features": [$feature]}""")
     val df = spark.read.format("geojson").load(a, b).groupBy().count()
     assert(df.head().getLong(0) == 3L)
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("GeoJsonCountScan"), s"count not pushed:\n$plan")
-    // composes with the pushed geometry_type filter — the per-document
-    // tally honors it, still without building any feature row
+    // composes with the pushed geometry_type filter
     val mixed = tmpFile("c3.json",
       s"""{"type": "FeatureCollection", "features": [$feature, $pointFeature]}""")
     val filtered = spark.read.format("geojson").load(mixed)
       .filter(col("geometry_type") === "LineString").groupBy().count()
     assert(filtered.head().getLong(0) == 1L)
-    assert(filtered.queryExecution.executedPlan.toString.contains("GeoJsonCountScan"))
     // and with document pruning — non-matching docs aren't even parsed
     val pruned = spark.read.format("geojson").load(a, b)
       .filter(col("source_file") === "c1.json").groupBy().count()
     assert(pruned.head().getLong(0) == 2L)
     assert(pruned.queryExecution.executedPlan.toString.contains("docs=1/2"),
-      s"document pruning lost under count pushdown")
+      s"document pruning lost under a count")
   }
 
   test("connector reports pruned-size statistics so small geojson sides can broadcast") {
@@ -294,14 +333,12 @@ class GeoJsonSourceSpec extends SparkSpec {
   test("count under a NON-pushable filter falls back to the row scan, correctly") {
     val mixed = tmpFile("np.json",
       s"""{"type": "FeatureCollection", "features": [$feature, $pointFeature, $feature]}""")
-    // feature_idx is not a pushable column: the residual Filter must block
-    // aggregate pushdown and the plain row scan must serve the count
+    // feature_idx is not a pushable column: Spark evaluates it above the
+    // row scan that serves the count
     val df = spark.read.format("geojson").load(mixed)
       .filter(col("feature_idx") >= 1).groupBy().count()
     assert(df.head().getLong(0) == 2L)
     val plan = df.queryExecution.executedPlan.toString
-    assert(!plan.contains("GeoJsonCountScan"),
-      s"aggregate must not push past a residual filter:\n$plan")
     assert(plan.contains("GeoJsonScan"), s"row scan missing:\n$plan")
   }
 
@@ -517,7 +554,7 @@ class GeoJsonSourceSpec extends SparkSpec {
       "written sidecars must prune the disjoint query to zero fetches")
   }
 
-  test("count(*) pushdown stays correct under a pushed bbox filter") {
+  test("count(*) stays correct under a pushed bbox filter") {
     val far = feature.replace("[[325000.0, 673000.0], [325300.0, 673400.0]]",
       "[[5000.0, 8000.0], [5100.0, 8050.0]]")
     val fc = tmpFile("bbc.json",
@@ -525,11 +562,7 @@ class GeoJsonSourceSpec extends SparkSpec {
     val q = envFilter(spark.read.format("geojson").load(fc),
       320000, 670000, 330000, 680000)
     assert(q.count() == 2)
-    val agg = q.groupBy().count()
-    val plan = agg.queryExecution.executedPlan.toString
-    assert(plan.contains("GeoJsonCountScan"),
-      s"bbox filter must not block COUNT(*) pushdown:\n$plan")
-    assert(agg.head().getLong(0) == 2L)
+    assert(q.groupBy().count().head().getLong(0) == 2L)
   }
 
   // ---- packing documents into scan partitions ----

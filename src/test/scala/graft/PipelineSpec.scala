@@ -129,7 +129,7 @@ class PipelineSpec extends SparkSpec {
         s"$shape schema:\n${got.schema.treeString}\nvs\n${want.schema.treeString}")
       assert(multiset(got.collect().toSeq.map(_.toString)) == multiset(want.collect().toSeq.map(_.toString)),
         s"$shape rows differ")
-      // run's GeoJSON half; its CSV half cannot write the nested columns
+      // run's GeoJSON half; its CSV half is checked on these shapes below
       val propCols = want.columns.filterNot(Seq("geometry_type", "coordinates").contains).toSeq
       assert(geojsonLines(Sinks.writeGeoJson(got, s"$out/gj", "routes", shape, propCols)) ==
         geojsonLines(Sinks.writeGeoJson(want, s"$out/ref-gj", "routes", shape, propCols)),
@@ -157,6 +157,61 @@ class PipelineSpec extends SparkSpec {
       def csvRows(d: String) = multiset(lines(d).filterNot(_ == header))
       assert(lines(csv).head == header && csvRows(csv) == csvRows(refCsv), s"$shape CSV sink differs")
     }
+  }
+
+  test("run writes nested property values to the CSV as JSON text") {
+    val out = Files.createTempDirectory("pipeline-nested").toString
+    shapeDirs(flat = false).foreach { case (shape, dir) =>
+      val (_, csv) = Pipeline.run(spark, dir, out, shape)
+      val asText = Map("ignoreNullFields" -> "false")
+      val want = Pipeline.processRoutes(spark, dir).select(col("route_id"),
+        to_json(col("meta"), asText).as("meta"), to_json(col("tags"), asText).as("tags"))
+      val got = spark.read.option("header", "true").csv(csv).select("route_id", "meta", "tags")
+      assert(multiset(got.collect().toSeq.map(_.toString)) == multiset(want.collect().toSeq.map(_.toString)),
+        s"$shape CSV nested columns differ")
+      assert(lines(csv).exists(_.contains("""{\"lanes\":1,\"surface\":null}""")), s"$shape meta text")
+    }
+  }
+
+  test("the GeoJSON sink's directory loads back every feature with processRoutes' values") {
+    val out = Files.createTempDirectory("pipeline-load").toString
+    shapeDirs(flat = true).foreach { case (shape, dir) =>
+      val (gj, _) = Pipeline.run(spark, dir, out, shape)
+      val want = Pipeline.processRoutes(spark, dir).drop("geometry_type", "coordinates")
+      val got = spark.read.format("geojson").load(gj)
+        .select(from_json(col("properties_json"), want.schema).as("p")).select("p.*")
+      assert(multiset(got.collect().toSeq.map(_.toString)) == multiset(want.collect().toSeq.map(_.toString)),
+        s"$shape sink properties differ")
+    }
+  }
+
+  test("run writes a feature without geometry as a null geometry in both sinks") {
+    val dir = Files.createTempDirectory("pipeline-nogeom")
+    val bare = """{"type": "Feature", "properties": {"route_id": "R2"}, "geometry": null}"""
+    Files.writeString(dir.resolve("a.geojson"),
+      s"""{"type": "FeatureCollection", "features": [${routeFeature(1, """{"route_id": "R1"}""")}, $bare]}""")
+    val out = Files.createTempDirectory("pipeline-nogeom-out").toString
+    val (gj, csv) = Pipeline.run(spark, dir.toString, out, "nogeom")
+    val back = spark.read.format("geojson").load(gj)
+      .select(col("properties")("route_id"), col("geometry_type"), col("parts"))
+      .collect().map(r => (r.getString(0), Option(r.getString(1)), r.isNullAt(2))).toSet
+    assert(back == Set(("R1", Some("LineString"), false), ("R2", None, true)))
+    assert(lines(gj).count(_.contains("\"geometry\":null")) == 1)
+    assert(spark.read.option("header", "true").csv(csv).count() == 2)
+  }
+
+  test("the GeoJSON sink writes to a file: URI and refuses other schemes") {
+    val dir = Files.createTempDirectory("pipeline-uri").toString
+    val in = s"$dir/in.geojson"
+    Files.writeString(Paths.get(in), routeFeature(1, """{"route_id": "R1"}"""))
+    val routes = Pipeline.processRoutes(spark, in)
+    val gj = Sinks.writeGeoJson(routes, s"file://$dir/out", "routes", "uri", Seq("route_id"))
+    assert(new java.io.File(s"$dir/out/routes_uri.geojson").isDirectory)
+    assert(spark.read.format("geojson").load(gj).count() == 1)
+    val ex = intercept[IllegalArgumentException] {
+      Sinks.writeGeoJson(routes, "memory://bucket/out", "routes", "uri", Seq("route_id"))
+    }
+    assert(ex.getMessage.contains("memory:"), ex.getMessage)
   }
 
   test("a directory mixing the three shapes returns every feature") {
