@@ -9,7 +9,10 @@ object GraftSession {
 
   /** A `local[cpus]` session with [[GraftExtensions]] installed, shuffle
     * partitions equal to `cpus`, the UI off, WARN logging and
-    * [[SparkEntry.tune]]'s pinned semantics. `cpus` defaults to
+    * [[SparkEntry.tune]]'s pinned semantics. Installing the extensions also
+    * sizes Spark's generated-class cache to 1000 entries
+    * ([[GraftExtensions.sizeCodegenCache]]), so a warm pass re-runs its
+    * queries without recompiling them. `cpus` defaults to
     * `SPARK_GRAFT_CPUS`, else 4. Like `getOrCreate`, a second call in the
     * same JVM returns the active session (re-tuned), not a new context.
     */

@@ -14,20 +14,24 @@ object Tables {
   private val relMemo =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), CachedRel]()
 
-  /** Load with a per-(session, path, content-stamp) RELATION memo. A bare
-    * `spark.read.parquet` re-infers the schema (a footer-read Spark job)
-    * and re-lists the directory on every call — 100–700 ms per query in
-    * local mode (measured) and a driver-side footer fetch
-    * per query at cluster scale. A real deployment resolves tables from a
-    * catalog that stores schema + file index; this memo is that catalog
-    * seam. The stamp is [[Warehouse.fingerprint]] (recursive file count,
+  /** Load table `name` of the scale-factor directory `dir` through [[read]]. */
+  def load(spark: SparkSession, dir: String, name: String): DataFrame =
+    read(spark, s"$dir/$name.parquet")
+
+  /** Read the parquet dataset at `path` through a per-(session, path,
+    * content-stamp) RELATION memo; [[load]] and [[Warehouse.table]] both read
+    * through it. A bare `spark.read.parquet` re-infers the schema (a
+    * footer-read Spark job) and re-lists the directory on every call —
+    * 100–700 ms per query in local mode (measured) and a driver-side footer
+    * fetch per query at cluster scale. A real deployment resolves tables
+    * from a catalog that stores schema + file index; this memo is that
+    * catalog seam. The stamp is [[Warehouse.fingerprint]] (recursive file count,
     * bytes and max mtime, through the Hadoop FileSystem of any scheme): a
     * part file added, removed or rewritten in place changes it even when
     * the dataset directory's own mtime and size do not, so a fresh listing
     * and schema are taken exactly when the data could have changed.
     */
-  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val path = s"$dir/$name.parquet"
+  def read(spark: SparkSession, path: String): DataFrame = {
     val stamp = Warehouse.fingerprint(spark, path)
     val key = (spark, path)
     val c = relMemo.get(key)

@@ -65,6 +65,8 @@ object Warehouse {
 
   /** Read table `name` for `inputKey`, building it with `build` on first
     * use (per warehouse, atomically across JVMs — see [[publishStrict]]).
+    * The published table is read through [[Tables.read]]'s relation memo,
+    * so a later call for the same key lists the table but runs no job.
     */
   def table(s: SparkSession, name: String, inputKey: String)
            (build: => DataFrame): DataFrame = {
@@ -86,7 +88,7 @@ object Warehouse {
           memo.remove(path, fresh); fresh.completeExceptionally(e); throw e
       }
     } else prior.join()
-    s.read.parquet(path)
+    Tables.read(s, path)
   }
 
   private def ensureBuilt(s: SparkSession, path: String)

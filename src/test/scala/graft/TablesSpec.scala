@@ -2,8 +2,69 @@ package graft
 
 import java.io.File
 import java.nio.file.Files
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 class TablesSpec extends SparkSpec {
+
+  /** `body`'s result and the Spark jobs it started, counted by a listener.
+    * Jobs are told apart by a local property, and a marker job run after
+    * `body` flushes the listener queue: events arrive in order, so once the
+    * marker's start is seen, every job `body` started has been counted.
+    */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    val marker = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("graft.spec.region")) match {
+          case Some("body")   => jobs.incrementAndGet()
+          case Some("marker") => marker.countDown()
+          case _              =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty("graft.spec.region", "body")
+      val result = body
+      sc.setLocalProperty("graft.spec.region", "marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(marker.await(60, TimeUnit.SECONDS), "marker job never reached the listener")
+      (result, jobs.get)
+    } finally {
+      sc.setLocalProperty("graft.spec.region", null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("a second Warehouse.table call for the same key runs no Spark job") {
+    val root = Files.createTempDirectory("graft-wh-memo-").toString
+    spark.conf.set("spark.graft.warehouseDir", root)
+    try {
+      def table() = Warehouse.table(spark, "memo_t", "key-a")(spark.range(0, 3).toDF("id"))
+      val (_, first) = jobsOf(table())
+      assert(first > 0, "the first call builds and reads the table")
+      val (again, second) = jobsOf(table())
+      assert(second == 0, s"the second call re-read the published table: $second jobs")
+      assert(again.collect().map(_.getLong(0)).sorted.toSeq == Seq(0L, 1L, 2L))
+    } finally spark.conf.unset("spark.graft.warehouseDir")
+  }
+
+  test("a Warehouse.table read for a different input key returns its own rows") {
+    val root = Files.createTempDirectory("graft-wh-keys-").toString
+    spark.conf.set("spark.graft.warehouseDir", root)
+    try {
+      def ids(key: String, from: Long) =
+        Warehouse.table(spark, "keys_t", key)(spark.range(from, from + 3).toDF("id"))
+          .collect().map(_.getLong(0)).sorted.toSeq
+      assert(ids("key-a", 0) == Seq(0L, 1L, 2L))
+      assert(ids("key-b", 10) == Seq(10L, 11L, 12L))
+      assert(ids("key-a", 99) == Seq(0L, 1L, 2L))
+    } finally spark.conf.unset("spark.graft.warehouseDir")
+  }
 
   test("Tables.load sees a part file of a directory dataset rewritten in place") {
     import spark.implicits._

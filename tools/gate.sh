@@ -29,7 +29,10 @@ fi
 
 if [[ "${1:-}" == "full" ]]; then
   rm -rf /tmp/gate_vout
-  sbt -batch "runMain graft.Verify /root/testdata/sf0.01 /tmp/gate_vout" >/dev/null 2>&1
+  # Verify exits 1 naming the failed queries; under set -e a bare call would
+  # end the gate without a word
+  sbt -batch "runMain graft.Verify /root/testdata/sf0.01 /tmp/gate_vout" >/tmp/gate_verify.log 2>&1 \
+    || { echo "GATE FAIL: Verify exited nonzero: $(grep -o '[0-9]* queries failed: .*' /tmp/gate_verify.log | tail -1) (log: /tmp/gate_verify.log)"; exit 1; }
   python3 tools/check.py /root/testdata/sf0.01 /tmp/gate_vout | tail -1
   python3 tools/check.py /root/testdata/sf0.01 /tmp/gate_vout | tail -1 | grep -q "ALL GREEN" \
     || { echo "GATE FAIL: correctness"; exit 1; }
