@@ -79,11 +79,8 @@ object SparkEntry {
     // size is memoized: a failed lookup (a transient storage fault) or a
     // directory that is missing or empty is asked again on the next call.
     val bytes: Long = Option(dirBytesMemo.get(dir)).fold {
-      val n = try {
-        val p = new org.apache.hadoop.fs.Path(dir)
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
-      } catch { case scala.util.control.NonFatal(_) => 0L }
+      val n = try Tables.bytesAt(spark, dir)
+              catch { case scala.util.control.NonFatal(_) => 0L }
       if (n > 0L) dirBytesMemo.put(dir, n)
       n
     }(_.longValue)

@@ -112,17 +112,20 @@ object Tables {
     */
   def documentsSpread(s: SparkSession, d: String, minBytes: Long = 2L << 20): DataFrame = {
     val df = documents(s, d)
-    val local = new java.io.File(s"$d/documents.parquet".stripPrefix("file:"))
-    // For directory-layout parquet (standard Spark write output) File.length
-    // is the directory inode size (~4 KB) — sum the data files instead so a
-    // large multi-file corpus still clears the threshold.
-    val bytes =
-      if (local.isDirectory)
-        Option(local.listFiles).map(_.filter(_.isFile).map(_.length).sum).getOrElse(0L)
-      else local.length
-    if (local.exists && bytes >= minBytes)
+    if (bytesAt(s, s"$d/documents.parquet") >= minBytes)
       df.repartition(s.sparkContext.defaultParallelism)
     else df
   }
+
+  /** Total bytes of the files at `path` (recursively, for a directory), read
+    * from the Hadoop filesystem the path names, so every scheme the session
+    * can read is sized; 0 when nothing is there.
+    */
+  def bytesAt(s: SparkSession, path: String): Long = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
+  }
+
   def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")
 }

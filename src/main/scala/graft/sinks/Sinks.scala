@@ -20,8 +20,8 @@ object Sinks {
     * sidecar its scan prunes on, so `load(<returned dir>)` reads them back.
     * Expects `geometry_type`, `coordinates` (one line) and the property
     * columns to keep; a row with null `coordinates` writes
-    * `"geometry": null`. `outDir` is a local path or a `file:` URI: the
-    * connector's writer commits through the local filesystem.
+    * `"geometry": null`. `outDir` may name any filesystem the session's
+    * Hadoop conf resolves: the connector's writer commits through it.
     */
   def writeGeoJson(df: DataFrame, outDir: String, baseName: String, timestamp: String,
                    propCols: Seq[String]): String = {

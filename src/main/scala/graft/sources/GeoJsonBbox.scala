@@ -1,6 +1,8 @@
 package graft.sources
 
 import com.fasterxml.jackson.databind.JsonNode
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileSystem, Path}
 import scala.jdk.CollectionConverters._
 
 /** Spatial bbox pushdown support for the GeoJSON connector — the geo-analog
@@ -93,17 +95,7 @@ object GeoJsonBbox {
     * queue's `.json` suffix filter, glob loads — ever mistakes one for a
     * document.
     */
-  private def sidecarFile(docPath: String): java.io.File = {
-    val p = if (docPath.startsWith("file:")) new java.net.URI(docPath).getPath else docPath
-    val f = new java.io.File(p)
-    new java.io.File(f.getParentFile, "." + f.getName + ".bbox")
-  }
-
-  private def docFile(docPath: String): java.io.File = {
-    val p = if (docPath.startsWith("file:")) new java.net.URI(docPath).getPath
-            else docPath
-    new java.io.File(p)
-  }
+  private def sidecar(doc: Path): Path = new Path(doc.getParent, s".${doc.getName}.bbox")
 
   /** Read a document's sidecar envelope; None when absent/unreadable OR
     * STALE (the document is then read normally — stats are advisory, never
@@ -121,21 +113,17 @@ object GeoJsonBbox {
     * hash would re-read the document the sidecar exists to avoid. Legacy
     * 4/6-field sidecars (no stamp / no CRC) are treated as stale.
     */
-  def sidecarOf(docPath: String): Option[Env] =
+  def sidecarOf(docPath: String,
+                conf: Configuration = GeoJsonDataSource.hadoopConf()): Option[Env] =
     try {
-      val f = sidecarFile(docPath)
-      val doc = docFile(docPath)
-      if (!f.isFile) None
-      else {
-        val parts = new String(java.nio.file.Files.readAllBytes(f.toPath),
-          java.nio.charset.StandardCharsets.UTF_8).trim.split(",")
-        if (parts.length != 7) None
-        else if (doc.isFile &&
-          (parts(4).toLong != doc.length || parts(5).toLong != doc.lastModified ||
-            parts(6).toLong != headTailCrc(doc))) None
-        else Some((parts(0).toDouble, parts(1).toDouble,
-          parts(2).toDouble, parts(3).toDouble))
-      }
+      val doc = new Path(docPath)
+      val fs = doc.getFileSystem(conf)
+      val parts = GeoJsonFetch.read(fs, sidecar(doc)).trim.split(",")
+      lazy val st = fs.getFileStatus(doc)
+      if (parts.length != 7 || parts(4).toLong != st.getLen ||
+          parts(5).toLong != st.getModificationTime ||
+          parts(6).toLong != headTailCrc(fs, doc, st.getLen)) None
+      else Some((parts(0).toDouble, parts(1).toDouble, parts(2).toDouble, parts(3).toDouble))
     } catch { case scala.util.control.NonFatal(_) => None }
 
   /** CRC32 over the first and last 64 KB of the document — a bounded-I/O
@@ -144,44 +132,43 @@ object GeoJsonBbox {
     * exact length it can only be defeated by a rewrite that preserves
     * length, mtime, AND both 64 KB windows.
     */
-  private def headTailCrc(doc: java.io.File): Long = {
+  private def headTailCrc(fs: FileSystem, doc: Path, len: Long): Long = {
     val crc = new java.util.zip.CRC32()
-    val raf = new java.io.RandomAccessFile(doc, "r")
+    val in = fs.open(doc)
     try {
-      val len = raf.length()
       val head = new Array[Byte](math.min(len, 65536L).toInt)
-      raf.readFully(head)
+      in.readFully(head)
       crc.update(head)
       if (len > 65536L) {
         val tailStart = math.max(65536L, len - 65536L)
         val tail = new Array[Byte]((len - tailStart).toInt)
-        raf.seek(tailStart)
-        raf.readFully(tail)
+        in.seek(tailStart)
+        in.readFully(tail)
         crc.update(tail)
       }
       crc.getValue
-    } finally raf.close()
+    } finally in.close()
   }
 
   /** Write a sidecar for an envelope (the sink path and [[index]] share it):
     * the four envelope bounds plus the document's content stamp (byte
     * length, mtime, head/tail CRC) that [[sidecarOf]] validates against.
     */
-  def writeSidecar(docPath: String, env: Env): Unit = {
-    val sc = sidecarFile(docPath)
-    val doc = docFile(docPath)
-    // A document deleted/replaced between isFile and the CRC read must not
-    // fail the sink's per-file commit — fall back to the no-stamp tuple (the
-    // sidecar then just reads as stale, same as the doc-absent case).
+  def writeSidecar(docPath: String, env: Env, conf: Configuration): Unit = {
+    val doc = new Path(docPath)
+    val fs = doc.getFileSystem(conf)
+    // A document deleted/replaced between the status and the CRC read must
+    // not fail the sink's per-file commit — fall back to the no-stamp tuple
+    // (the sidecar then just reads as stale, same as the doc-absent case).
     val (len, mt, crc) =
       try {
-        if (doc.isFile) (doc.length, doc.lastModified, headTailCrc(doc))
-        else (0L, 0L, 0L)
+        val st = fs.getFileStatus(doc)
+        (st.getLen, st.getModificationTime, headTailCrc(fs, doc, st.getLen))
       } catch { case scala.util.control.NonFatal(_) => (0L, 0L, 0L) }
-    java.nio.file.Files.write(sc.toPath,
-      s"${env._1},${env._2},${env._3},${env._4},$len,$mt,$crc".getBytes(
-        java.nio.charset.StandardCharsets.UTF_8))
-    ()
+    val out = fs.create(sidecar(doc), true)
+    try out.write(s"${env._1},${env._2},${env._3},${env._4},$len,$mt,$crc".getBytes(
+      java.nio.charset.StandardCharsets.UTF_8))
+    finally out.close()
   }
 
   /** One-time indexing of an EXISTING document (the foreign-document path —
@@ -190,11 +177,11 @@ object GeoJsonBbox {
     * None for a document with no coordinates (no sidecar written — an empty
     * envelope cannot prune).
     */
-  def index(docPath: String): Option[Env] = {
-    val env = GeoJsonFeatures.iterate(docPath)
+  def index(docPath: String, conf: Configuration = GeoJsonDataSource.hadoopConf()): Option[Env] = {
+    val env = GeoJsonFeatures.iterate(docPath, conf)
       .flatMap(envelope)
       .foldLeft(Option.empty[Env]) { case (acc, e) => Some(union(acc, e)) }
-    env.foreach(writeSidecar(docPath, _))
+    env.foreach(writeSidecar(docPath, _, conf))
     env
   }
 
@@ -207,8 +194,8 @@ object GeoJsonBbox {
   /** Document pruning decision: keep unless a sidecar PROVES no feature can
     * satisfy every pushed predicate.
     */
-  def keepDoc(docPath: String, preds: Seq[BboxPred]): Boolean =
-    preds.isEmpty || (sidecarOf(docPath) match {
+  def keepDoc(docPath: String, preds: Seq[BboxPred], conf: Configuration): Boolean =
+    preds.isEmpty || (sidecarOf(docPath, conf) match {
       case Some(doc) => preds.forall(_.satisfiableForDoc(doc))
       case None => true
     })

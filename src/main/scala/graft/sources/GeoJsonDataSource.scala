@@ -3,6 +3,9 @@ package graft.sources
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import com.fasterxml.jackson.databind.util.RawValue
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -11,12 +14,14 @@ import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Tabl
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.write._
+import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
 import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 import scala.jdk.CollectionConverters._
 
@@ -51,12 +56,14 @@ import scala.jdk.CollectionConverters._
   * pruning is pushed into the reader (SupportsPushDownRequiredColumns) so a
   * properties-only query never materializes coordinate arrays.
   *
-  * Inputs are `load(paths*)` file paths or a `url` option; a batch read
-  * expands a local directory into its `.geojson`/`.json` documents, sorted by
-  * name ([[GeoJsonDataSource.listDocs]]). URL fetch goes
-  * through [[GeoJsonFetch]]: `file:` URLs (and bare paths) resolve locally;
-  * `http(s):` is the production fetch seam and fails fast in this offline
-  * environment with a clear message rather than a stub result.
+  * Inputs are `load(paths*)` paths or a `url` option, resolved through
+  * Hadoop's `Path.getFileSystem`, so a document lives on any filesystem the
+  * session's Hadoop conf names (bare paths and `file:` locally, `hdfs:`,
+  * `s3a:` and the like elsewhere); a batch read expands a directory into its
+  * `.geojson`/`.json` documents, sorted by name
+  * ([[GeoJsonDataSource.listDocs]]). `http(s):` urls are the production
+  * fetch seam ([[GeoJsonFetch]]) and fail fast in this offline environment
+  * with a clear message rather than a stub result.
   */
 class GeoJsonDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "geojson"
@@ -95,53 +102,74 @@ object GeoJsonDataSource {
     all
   }
 
-  /** The `.geojson`/`.json` documents of a local directory, sorted by name:
-    * a batch read's directory input and a stream's per-batch queue listing.
-    */
-  def listDocs(dir: String): Seq[String] =
-    Option(localFile(dir).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isFile && (f.getName.endsWith(".geojson") || f.getName.endsWith(".json")))
-      .map(_.getAbsolutePath).sorted.toSeq
+  /** A document as one scan resolved it: its path and its byte length. */
+  final case class Doc(path: String, bytes: Long) {
+    def name: String = path.split('/').last
+  }
 
-  /** Batch inputs with every local directory expanded by [[listDocs]]. */
-  def documents(inputs: Seq[String]): Seq[String] =
-    inputs.flatMap(p => if (localFile(p).isDirectory) listDocs(p) else Seq(p))
-
-  /** A write's output directory as a local path: a bare path as given, a
-    * `file:` URI as its path. The writer commits through `java.io` (see
-    * [[GeoJsonWriteBuilder]]), so any other scheme is refused rather than
-    * written to a relative local directory named after the URI.
+  /** The active session's Hadoop configuration, built as Spark's own file
+    * scans build it (`spark.hadoop.*` and session settings included).
     */
-  def localDir(path: String): String = {
-    val uri = new org.apache.hadoop.fs.Path(path).toUri
-    Option(uri.getScheme) match {
-      case None => path
-      case Some("file") => uri.getPath
-      case Some(scheme) => throw new IllegalArgumentException(
-        s"geojson write: $scheme: paths are not supported, the writer commits " +
-          s"through the local filesystem (got $path)")
+  def hadoopConf(): Configuration =
+    org.apache.spark.sql.classic.SparkSession.active.sessionState.newHadoopConf()
+
+  /** `conf` shipped to the tasks of a read or write, as Spark's own file
+    * scans ship theirs. A Hadoop conf broadcast costs ~10 ms (each of its
+    * ~1,100 entries is written through its own gzip stream), a tenth of a
+    * small query, so the last one is reused while its entries are unchanged.
+    */
+  def broadcast(conf: Configuration): Broadcast[SerializableConfiguration] = {
+    val sc = SparkSession.active.sparkContext
+    val entries = conf.iterator().asScala.map(e => e.getKey -> e.getValue).toMap
+    lastBroadcast.synchronized {
+      lastBroadcast.get match {
+        case (`sc`, `entries`, b) => b
+        case _ =>
+          val b = sc.broadcast(new SerializableConfiguration(conf))
+          lastBroadcast.set((sc, entries, b))
+          b
+      }
     }
   }
+  private val lastBroadcast = new java.util.concurrent.atomic.AtomicReference[
+    (org.apache.spark.SparkContext, Map[String, String], Broadcast[SerializableConfiguration])](
+    (null, Map.empty, null))
 
-  private def localFile(doc: String): java.io.File =
-    new java.io.File(if (doc.startsWith("file:")) new java.net.URI(doc).getPath else doc)
-
-  /** Byte size of a document that resolves to a local file (bare path or
-    * `file:` url); None for the remote-fetch seam or a missing file.
+  /** The `.geojson`/`.json` documents of a directory, sorted by name: a
+    * batch read's directory input and a stream's per-batch queue listing
+    * (empty while the directory does not exist yet). A directory given as a
+    * bare path lists bare paths, the strings older stream checkpoints hold.
     */
-  def localSize(doc: String): Option[Long] = {
-    val f = localFile(doc)
-    if (f.isFile) Some(f.length()) else None
+  def listDocs(dir: String, conf: Configuration): Seq[Doc] = {
+    val p = GeoJsonFetch.path(dir)
+    val fs = p.getFileSystem(conf)
+    val bare = p.toUri.getScheme == null
+    (if (fs.exists(p)) fs.listStatus(p).toSeq else Nil)
+      .filter(st => st.isFile && Seq(".geojson", ".json").exists(st.getPath.getName.endsWith))
+      .map { st =>
+        val doc = if (bare) Path.getPathWithoutSchemeAndAuthority(st.getPath) else st.getPath
+        Doc(doc.toString, st.getLen)
+      }
+      .sortBy(_.path)
   }
 
-  /** Documents whose file name every keep-set (pushed or runtime
-    * `source_file` values) contains and whose `.bbox` sidecar, if any, can
-    * meet the pushed envelope predicates; runs on the driver, before fetch.
+  /** Batch inputs resolved once per scan: each directory expanded by
+    * [[listDocs]], each file sized from its status.
     */
-  def prune(docs: Seq[String], keeps: Seq[Option[Set[String]]],
-            bboxPreds: Seq[GeoJsonBbox.BboxPred]): Seq[String] =
-    docs.filter(d => keeps.flatten.forall(_.contains(d.split('/').last)))
-      .filter(GeoJsonBbox.keepDoc(_, bboxPreds))
+  def documents(inputs: Seq[String], conf: Configuration): Seq[Doc] = inputs.flatMap { in =>
+    val p = GeoJsonFetch.path(in)
+    val st = p.getFileSystem(conf).getFileStatus(p)
+    if (st.isDirectory) listDocs(in, conf) else Seq(Doc(in, st.getLen))
+  }
+
+  /** Documents whose file name the keep-set (pushed `source_file` values)
+    * contains and whose `.bbox` sidecar, if any, can meet the pushed
+    * envelope predicates; runs on the driver, before fetch.
+    */
+  def prune(docs: Seq[Doc], keep: Option[Set[String]], bboxPreds: Seq[GeoJsonBbox.BboxPred],
+            conf: Configuration): Seq[Doc] =
+    docs.filter(d => keep.forall(_.contains(d.name)))
+      .filter(d => GeoJsonBbox.keepDoc(d.path, bboxPreds, conf))
 
   /** Packs the surviving documents into scan partitions by Spark's file-split
     * rule: `maxSplit = min(maxPartitionBytes, max(openCostInBytes,
@@ -149,15 +177,14 @@ object GeoJsonDataSource {
     * (`FilePartition.maxSplitBytes`), filled next-fit in input order with
     * each document charged its bytes plus `openCostInBytes`, exactly as a
     * file scan fills its `FilePartition`s. Documents are never split, so one
-    * larger than `maxSplit` gets a partition of its own, and so does one that
-    * cannot be sized locally. Pruning happens before this call, so a pruned
-    * document is never fetched; input order is kept across partitions.
+    * larger than `maxSplit` gets a partition of its own. Pruning happens
+    * before this call, so a pruned document is never fetched; input order is
+    * kept across partitions.
     */
-  def pack(docs: Seq[String]): Array[InputPartition] = {
+  def pack(docs: Seq[Doc]): Array[InputPartition] = {
     val openCost = SQLConf.get.filesOpenCostInBytes
-    val sized = docs.map(d => d -> localSize(d))
     val maxSplit = FilePartition.maxSplitBytes(SparkSession.active,
-      sized.flatMap(_._2).map(_ + openCost).sum)
+      docs.map(_.bytes + openCost).sum)
     val parts = Array.newBuilder[InputPartition]
     val current = scala.collection.mutable.ArrayBuffer.empty[String]
     var currentSize = 0L
@@ -165,21 +192,19 @@ object GeoJsonDataSource {
       parts += GeoJsonInputPartition(current.toList)
       current.clear(); currentSize = 0L
     }
-    sized.foreach {
-      case (doc, Some(bytes)) =>
-        if (currentSize + bytes > maxSplit) close()
-        current += doc; currentSize += bytes + openCost
-      case (doc, None) =>
-        close(); parts += GeoJsonInputPartition(Seq(doc))
+    docs.foreach { d =>
+      if (currentSize + d.bytes > maxSplit) close()
+      current += d.path; currentSize += d.bytes + openCost
     }
     close()
     parts.result()
   }
 }
 
-/** Resolves a source url/path to document text. The `http(s)` branch is where
-  * a production deployment plugs its HTTP client (the reference fetches a WFS
-  * GetFeature url); this environment has no egress, so it fails fast.
+/** Resolves a source url/path to document text through its Hadoop
+  * filesystem. The `http(s)` branch is where a production deployment plugs
+  * its HTTP client (the reference fetches a WFS GetFeature url); this
+  * environment has no egress, so it fails fast.
   */
 object GeoJsonFetch {
   /** Documents fetched since process start — the connector's cheapest
@@ -188,14 +213,30 @@ object GeoJsonFetch {
     */
   val fetches = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  def fetch(url: String): String = {
+  /** A document url as a Hadoop path. `http(s):` fails here, before any
+    * filesystem is resolved: Hadoop registers filesystems for those schemes,
+    * and resolving one would reach for the network.
+    */
+  def path(url: String): Path = {
     if (url.startsWith("http://") || url.startsWith("https://"))
       throw new UnsupportedOperationException(
         s"geojson: no network egress in this environment, cannot fetch $url " +
           "(use a file: url or a local path)")
+    new Path(url)
+  }
+
+  def fetch(url: String, conf: Configuration): String = {
+    val p = path(url)
     fetches.incrementAndGet()
-    val path = if (url.startsWith("file:")) new java.net.URI(url).getPath else url
-    new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)), "UTF-8")
+    read(p.getFileSystem(conf), p)
+  }
+
+  /** A whole file as UTF-8 text, in one read sized from its status. */
+  private[sources] def read(fs: FileSystem, p: Path): String = {
+    val bytes = new Array[Byte](Math.toIntExact(fs.getFileStatus(p).getLen))
+    val in = fs.open(p)
+    try in.readFully(bytes) finally in.close()
+    new String(bytes, java.nio.charset.StandardCharsets.UTF_8)
   }
 }
 
@@ -217,10 +258,8 @@ class GeoJsonTable(options: CaseInsensitiveStringMap)
     new GeoJsonScanBuilder(new CaseInsensitiveStringMap(merged))
   }
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-    new GeoJsonWriteBuilder(
-      GeoJsonDataSource.localDir(Option(info.options.get("path")).getOrElse(
-        throw new IllegalArgumentException("geojson write: missing path"))),
-      info.schema())
+    new GeoJsonWriteBuilder(Option(info.options.get("path")).getOrElse(
+      throw new IllegalArgumentException("geojson write: missing path")), info.schema())
 }
 
 /** Scan builder with column pruning AND filter pushdown. Two filter shapes
@@ -329,8 +368,12 @@ class GeoJsonScan(paths: Seq[String], required: StructType,
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
 
-  // `paths` as given to load(); a stream reads its one directory as a queue
-  private lazy val docs = GeoJsonDataSource.documents(paths)
+  private lazy val conf = GeoJsonDataSource.hadoopConf()
+  // `paths` as given to load(), resolved once; a stream reads its one
+  // directory as a queue instead
+  private lazy val docs = GeoJsonDataSource.documents(paths, conf)
+  // the documents the pushed filters keep, sidecars read once per scan
+  private lazy val kept = GeoJsonDataSource.prune(docs, fileKeep, bboxPreds, conf)
 
   /** RUNTIME document pruning (the connector's dynamic partition pruning):
     * when this scan sits under a join on `source_file`, Spark collects the
@@ -359,38 +402,36 @@ class GeoJsonScan(paths: Seq[String], required: StructType,
 
   /** Report the PRUNED documents' byte size so Catalyst can plan joins
     * against this source: without it a DSv2 scan defaults to "unknown =
-    * enormous" and a 2 KB GeoJSON dimension would never broadcast. Only
-    * local files are sized (the remote-fetch seam reports unknown rather
-    * than guessing), and document pruning shrinks the estimate the same way
-    * partition pruning shrinks a parquet scan's.
+    * enormous" and a 2 KB GeoJSON dimension would never broadcast. Document
+    * pruning shrinks the estimate the same way partition pruning shrinks a
+    * parquet scan's.
     */
   override def estimateStatistics(): Statistics = {
-    val sizes = prunedPaths.map(GeoJsonDataSource.localSize)
-    val total = if (sizes.exists(_.isEmpty)) java.util.OptionalLong.empty()
-                else java.util.OptionalLong.of(math.max(1L, sizes.flatten.sum))
+    val total = java.util.OptionalLong.of(math.max(1L, prunedDocs.map(_.bytes).sum))
     new Statistics {
       override def sizeInBytes(): java.util.OptionalLong = total
       override def numRows(): java.util.OptionalLong = java.util.OptionalLong.empty()
     }
   }
-  /** Documents surviving the pushed source_file pruning AND any runtime
-    * (join-driven) pruning delivered through [[filter]].
+  /** Documents surviving the pushed pruning AND any runtime (join-driven)
+    * pruning delivered through [[filter]].
     */
-  def prunedPaths: Seq[String] =
-    GeoJsonDataSource.prune(docs, Seq(fileKeep, runtimeKeep), bboxPreds)
+  def prunedDocs: Seq[GeoJsonDataSource.Doc] =
+    kept.filter(d => runtimeKeep.forall(_.contains(d.name)))
   override def planInputPartitions(): Array[InputPartition] =
-    GeoJsonDataSource.pack(prunedPaths)
+    GeoJsonDataSource.pack(prunedDocs)
   override def createReaderFactory(): PartitionReaderFactory =
-    new GeoJsonReaderFactory(required, geomKeep, geomNonNull, bboxPreds)
+    new GeoJsonReaderFactory(GeoJsonDataSource.broadcast(conf), required, geomKeep, geomNonNull,
+      bboxPreds)
   override def description(): String =
-    s"GeoJsonScan docs=${prunedPaths.size}/${docs.size}" +
+    s"GeoJsonScan docs=${prunedDocs.size}/${docs.size}" +
       geomKeep.fold("")(g => s" geometry_type IN ${g.mkString("(", ",", ")")}") +
       (if (bboxPreds.isEmpty) "" else s" bbox=${bboxPreds.size} preds")
   override def toMicroBatchStream(checkpointLocation: String):
       org.apache.spark.sql.connector.read.streaming.MicroBatchStream = {
     require(paths.size == 1,
       s"geojson streaming: readStream.load(<one queue directory>), got ${paths.size} paths")
-    new GeoJsonMicroBatchStream(paths.head, required)
+    new GeoJsonMicroBatchStream(paths.head, required, conf)
   }
 }
 
@@ -433,13 +474,13 @@ class GeoJsonDocsReader(partition: InputPartition,
   * name-ordered file queue has. Listing runs on the driver per batch
   * (one directory listing — no data), parsing runs on executors.
   */
-class GeoJsonMicroBatchStream(dir: String, required: StructType)
+class GeoJsonMicroBatchStream(dir: String, required: StructType, conf: Configuration)
     extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream {
   import org.apache.spark.sql.connector.read.streaming.Offset
 
   override def initialOffset(): Offset = GeoJsonStreamOffset("")
   override def latestOffset(): Offset =
-    GeoJsonStreamOffset(GeoJsonDataSource.listDocs(dir).lastOption.getOrElse(""))
+    GeoJsonStreamOffset(GeoJsonDataSource.listDocs(dir, conf).lastOption.fold("")(_.path))
   override def deserializeOffset(json: String): Offset =
     GeoJsonStreamOffset(new ObjectMapper().readTree(json).get("watermark").asText())
   override def commit(end: Offset): Unit = ()
@@ -448,10 +489,11 @@ class GeoJsonMicroBatchStream(dir: String, required: StructType)
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val lo = start.asInstanceOf[GeoJsonStreamOffset].watermark
     val hi = end.asInstanceOf[GeoJsonStreamOffset].watermark
-    GeoJsonDataSource.pack(GeoJsonDataSource.listDocs(dir).filter(p => p > lo && p <= hi))
+    GeoJsonDataSource.pack(
+      GeoJsonDataSource.listDocs(dir, conf).filter(d => d.path > lo && d.path <= hi))
   }
   override def createReaderFactory(): PartitionReaderFactory =
-    new GeoJsonReaderFactory(required)
+    new GeoJsonReaderFactory(GeoJsonDataSource.broadcast(conf), required)
 }
 
 case class GeoJsonStreamOffset(watermark: String)
@@ -464,16 +506,11 @@ case class GeoJsonStreamOffset(watermark: String)
 }
 
 /** DSv2 write path: each task writes its partition as newline-delimited
-  * Feature documents to a temp file; commit atomically moves the temp files
-  * into place, abort deletes them — a two-phase file commit.
-  *
-  * Deployment constraint: tasks write and the driver moves through
-  * `java.io` paths, which is only correct when driver and executors share a
-  * filesystem (local mode, NFS). The output path is a bare path or a `file:`
-  * URI; any other scheme (`hdfs:`, `s3a:`) is refused when the write is
-  * planned ([[GeoJsonDataSource.localDir]]). A cluster port should route
-  * these file ops, the `.bbox` sidecars and the reader's listing through the
-  * Hadoop FileSystem API, as the sibling parquet-based sinks already do.
+  * Feature documents to a temp file; commit moves the temp files into
+  * place, abort deletes them — a two-phase file commit ([[GeoJsonWrite]]).
+  * Tasks and the driver reach the output through Hadoop's `FileSystem`, so
+  * the output path may name any filesystem the session's Hadoop conf
+  * resolves, and the `.bbox` sidecars land beside the parts on it.
   *
   * Input columns are read by name, in the connector's read types, and any
   * other column is ignored (the table accepts any schema), so both `read →
@@ -505,134 +542,116 @@ class GeoJsonWriteBuilder(path: String, schema: StructType)
       "write the properties_json column to keep the values' types")
   private var truncateFirst = false
   override def truncate(): WriteBuilder = { truncateFirst = true; this }
-  override def build(): Write = new Write {
-    override def toBatch: BatchWrite = new GeoJsonBatchWrite(path, schema, truncateFirst)
-    override def toStreaming: org.apache.spark.sql.connector.write.streaming.StreamingWrite =
-      new GeoJsonStreamingWrite(path, schema)
-  }
+  override def build(): Write = new GeoJsonWrite(path, schema, truncateFirst)
 }
 
-/** Micro-batch streaming sink: per-epoch part files (`part-e<epoch>-…`), so a
+/** The batch and the micro-batch write, over one two-phase file commit:
+  * tasks write `<path>/_tmp/<attempt>.geojson`; a commit deletes the
+  * committed files the write replaces, moves each task file to its final
+  * name beside a fresh `.bbox` sidecar, and deletes `_tmp` with anything a
+  * killed attempt left in it; abort deletes `_tmp` the same way.
+  *
+  * A micro-batch writes per-epoch part files (`part-e<epoch>-…`), so a
   * REPLAYED epoch (failure recovery) overwrites its own files instead of
   * duplicating rows — commit is idempotent per epoch, the property a
   * file-based streaming sink needs under the at-least-once commit protocol.
   * Append semantics across epochs; the batch `format("geojson")` reader
   * lists all part files, so streamed output reads back symmetrically.
   */
-class GeoJsonStreamingWrite(path: String, schema: StructType)
-    extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
-  import org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory
-  override def createStreamingWriterFactory(info: PhysicalWriteInfo): StreamingDataWriterFactory = {
-    new java.io.File(path, "_tmp").mkdirs()
-    // top-level case class, NOT an anonymous inner class: the factory ships
-    // to executors and must not drag the (non-serializable) StreamingWrite
-    // along as its $outer
-    GeoJsonStreamingWriterFactory(path, schema)
+class GeoJsonWrite(path: String, schema: StructType, truncateFirst: Boolean)
+    extends Write with BatchWrite with StreamingWrite {
+  private val conf = GeoJsonDataSource.hadoopConf()
+  private val dir = new Path(path)
+  private val tmpDir = new Path(dir, "_tmp")
+
+  override def toBatch: BatchWrite = this
+  override def toStreaming: StreamingWrite = this
+  // both interfaces default it to true; a class mixing both must pick one
+  override def useCommitCoordinator(): Boolean = true
+
+  private def factory(): GeoJsonWriterFactory = {
+    dir.getFileSystem(conf).mkdirs(tmpDir)
+    GeoJsonWriterFactory(path, schema, GeoJsonDataSource.broadcast(conf))
   }
-  override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    // Idempotence must hold even when the REPLAY produces FEWER partitions
-    // than the failed attempt (AQE can re-plan the micro-batch): per-file
-    // REPLACE_EXISTING only overwrites matching partition ids, leaving the
-    // earlier attempt's higher-numbered part-e<epoch>-* files to duplicate
-    // rows on read-back. Clear the epoch's files wholesale first.
-    Option(new java.io.File(path).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isFile && f.getName.startsWith(s"part-e$epochId-"))
-      .foreach(_.delete())
+  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = factory()
+  override def createStreamingWriterFactory(info: PhysicalWriteInfo): StreamingDataWriterFactory =
+    factory()
+
+  // task ids differ between jobs, so overwrite must REMOVE the previous
+  // job's part files and their sidecars — replacing by name alone would
+  // union the two writes
+  override def commit(messages: Array[WriterCommitMessage]): Unit =
+    commitClearing(messages)(n => truncateFirst && (n.startsWith("part-") || n.startsWith(".part-")))
+  // Idempotence must hold even when the REPLAY produces FEWER partitions
+  // than the failed attempt (AQE can re-plan the micro-batch): replacing by
+  // name only overwrites matching partition ids, leaving the earlier
+  // attempt's higher-numbered part-e<epoch>-* files to duplicate rows on
+  // read-back. Clear the epoch's files wholesale first.
+  override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
+    commitClearing(messages)(_.startsWith(s"part-e$epochId-"))
+  override def abort(messages: Array[WriterCommitMessage]): Unit = deleteTmp()
+  override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = deleteTmp()
+
+  private def commitClearing(messages: Array[WriterCommitMessage])(clear: String => Boolean): Unit = {
+    val fs = dir.getFileSystem(conf)
+    fs.listStatus(dir).filter(st => st.isFile && clear(st.getPath.getName))
+      .foreach(st => fs.delete(st.getPath, false))
     messages.foreach { case GeoJsonCommitMessage(tmp, fin, bbox) =>
-      val dst = new java.io.File(path, fin)
-      java.nio.file.Files.move(new java.io.File(tmp).toPath, dst.toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      // same spatial-stats contract as the batch sink; the wholesale epoch
-      // clear above already removed any stale sidecar-less state, and a
-      // replayed epoch rewrites its sidecars with its own envelopes
-      new java.io.File(path, "." + fin + ".bbox").delete()
-      bbox.foreach(GeoJsonBbox.writeSidecar(dst.getPath, _))
+      val dst = new Path(dir, fin)
+      // a replayed epoch rewrites its part names, and not every filesystem's
+      // rename replaces an existing file
+      fs.delete(dst, false)
+      if (!fs.rename(new Path(tmp), dst))
+        throw new java.io.IOException(s"geojson commit: cannot move $tmp to $dst")
+      // lay down the spatial stats beside the data (the z-order analog:
+      // the sink writes the pruning statistics its own scan consumes); an
+      // envelope-less part (no coordinates) gets no sidecar, and a replaced
+      // part's stale sidecar must not outlive it
+      fs.delete(new Path(dir, s".$fin.bbox"), false)
+      bbox.foreach(GeoJsonBbox.writeSidecar(dst.toString, _, conf))
     }
+    deleteTmp()
   }
-  override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    // the DSv2 contract allows null slots for writers that never committed —
-    // pattern-matching them would throw MatchError and mask the original
-    // failure (same latent pattern fixed in the batch path)
-    messages.collect { case GeoJsonCommitMessage(tmp, _, _) => new java.io.File(tmp).delete() }
-    new java.io.File(path, "_tmp").delete()
-  }
+
+  private def deleteTmp(): Unit = dir.getFileSystem(conf).delete(tmpDir, true)
 }
 
 case class GeoJsonCommitMessage(tmpFile: String, finalName: String,
                                 bbox: Option[(Double, Double, Double, Double)] = None)
     extends WriterCommitMessage
 
-class GeoJsonBatchWrite(path: String, schema: StructType, truncateFirst: Boolean)
-    extends BatchWrite {
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    new java.io.File(path, "_tmp").mkdirs()
-    new GeoJsonWriterFactory(path, schema)
-  }
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    // task ids differ between jobs, so overwrite must REMOVE the previous
-    // job's part files and their sidecars — REPLACE_EXISTING alone would
-    // union the two writes
-    if (truncateFirst)
-      Option(new java.io.File(path).listFiles()).getOrElse(Array.empty)
-        .filter(f => f.isFile && (f.getName.startsWith("part-") || f.getName.startsWith(".part-")))
-        .foreach(_.delete())
-    messages.foreach { case GeoJsonCommitMessage(tmp, fin, bbox) =>
-      val dst = new java.io.File(path, fin)
-      java.nio.file.Files.move(new java.io.File(tmp).toPath, dst.toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      // lay down the spatial stats beside the data (the z-order analog:
-      // the sink writes the pruning statistics its own scan consumes);
-      // an envelope-less part (no coordinates) gets no sidecar, and a
-      // replaced part's stale sidecar must not outlive it
-      new java.io.File(path, "." + fin + ".bbox").delete()
-      bbox.foreach(GeoJsonBbox.writeSidecar(dst.getPath, _))
-    }
-    new java.io.File(path, "_tmp").delete()
-  }
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    // collect, not foreach: null slots (writers that never committed) are
-    // allowed by the DSv2 contract and must not MatchError
-    messages.collect { case GeoJsonCommitMessage(tmp, _, _) => new java.io.File(tmp).delete() }
-    new java.io.File(path, "_tmp").delete()
-  }
-}
-
-case class GeoJsonStreamingWriterFactory(path: String, schema: StructType)
-    extends org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long, epochId: Long)
-      : DataWriter[InternalRow] =
-    new GeoJsonDataWriter(path, schema,
-      tmpName = s"part-e$epochId-$partitionId-$taskId",
-      finalName = s"part-e$epochId-$partitionId")
-}
-
-class GeoJsonWriterFactory(path: String, schema: StructType) extends DataWriterFactory {
+/** Ships to the tasks, so a top-level case class rather than an anonymous
+  * one that would drag the (non-serializable) write along as its $outer.
+  */
+case class GeoJsonWriterFactory(path: String, schema: StructType,
+                                conf: Broadcast[SerializableConfiguration])
+    extends DataWriterFactory with StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new GeoJsonDataWriter(path, schema,
+    new GeoJsonDataWriter(path, schema, conf.value.value,
       tmpName = s"part-$partitionId-$taskId", finalName = s"part-$partitionId-$taskId")
+  override def createWriter(partitionId: Int, taskId: Long, epochId: Long): DataWriter[InternalRow] =
+    new GeoJsonDataWriter(path, schema, conf.value.value,
+      tmpName = s"part-e$epochId-$partitionId-$taskId", finalName = s"part-e$epochId-$partitionId")
 }
 
 /** `tmpName` must be unique per ATTEMPT (speculative twins must not share a
   * tmp file); `finalName` is the committed name — stable per (epoch,
   * partition) on the streaming path so replayed epochs overwrite themselves.
   */
-class GeoJsonDataWriter(path: String, schema: StructType, tmpName: String, finalName: String)
+class GeoJsonDataWriter(path: String, schema: StructType, conf: Configuration,
+                        tmpName: String, finalName: String)
     extends DataWriter[InternalRow] {
-  private val tmp = new java.io.File(s"$path/_tmp/$tmpName.geojson")
-  // UTF-8 explicitly — FileWriter's platform-default charset would corrupt
-  // non-ASCII property values against the reader's UTF-8 decode
-  private val out = java.nio.file.Files.newBufferedWriter(
-    tmp.toPath, java.nio.charset.StandardCharsets.UTF_8)
+  private val tmp = new Path(path, s"_tmp/$tmpName.geojson")
+  private val fs = tmp.getFileSystem(conf)
+  // UTF-8 explicitly — a platform-default charset would corrupt non-ASCII
+  // property values against the reader's UTF-8 decode
+  private val out = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
+    fs.create(tmp, true), java.nio.charset.StandardCharsets.UTF_8))
   private val mapper = new ObjectMapper()
   private val idx = schema.fieldNames.zipWithIndex.toMap
   // running envelope over every coordinate written — becomes the part
   // file's `.bbox` sidecar at commit
   private var envAcc: Option[GeoJsonBbox.Env] = None
-  private def growEnv(x: Double, y: Double): Unit = envAcc = Some(envAcc match {
-    case None => (x, y, x, y)
-    case Some((a, b, c, d)) =>
-      (math.min(a, x), math.min(b, y), math.max(c, x), math.max(d, y))
-  })
 
   override def write(row: InternalRow): Unit = {
     val doc = mapper.createObjectNode()
@@ -662,7 +681,10 @@ class GeoJsonDataWriter(path: String, schema: StructType, tmpName: String, final
     val coords = geom.putArray("coordinates")
     def pointInto(arr: ArrayNode, pt: ArrayData): Unit = {
       (0 until pt.numElements()).foreach(k => arr.add(pt.getDouble(k)))
-      if (pt.numElements() >= 2) growEnv(pt.getDouble(0), pt.getDouble(1))
+      if (pt.numElements() >= 2) {
+        val (x, y) = (pt.getDouble(0), pt.getDouble(1))
+        envAcc = Some(GeoJsonBbox.union(envAcc, (x, y, x, y)))
+      }
     }
     def lineInto(arr: ArrayNode, part: ArrayData): Unit =
       arrays(part).foreach(pointInto(arr.addArray(), _))
@@ -678,20 +700,21 @@ class GeoJsonDataWriter(path: String, schema: StructType, tmpName: String, final
   }
 
   override def commit(): WriterCommitMessage = {
-    out.close(); GeoJsonCommitMessage(tmp.getAbsolutePath, s"$finalName.geojson", envAcc)
+    out.close(); GeoJsonCommitMessage(tmp.toString, s"$finalName.geojson", envAcc)
   }
-  override def abort(): Unit = { out.close(); tmp.delete() }
+  override def abort(): Unit = { out.close(); fs.delete(tmp, false) }
   override def close(): Unit = ()
 }
 
-class GeoJsonReaderFactory(required: StructType,
+class GeoJsonReaderFactory(conf: Broadcast[SerializableConfiguration],
+                           required: StructType,
                            geomKeep: Option[Set[String]] = None,
                            geomNonNull: Boolean = false,
                            bboxPreds: Seq[GeoJsonBbox.BboxPred] = Seq.empty)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new GeoJsonDocsReader(partition,
-      new GeoJsonPartitionReader(_, required, geomKeep, geomNonNull, bboxPreds))
+      new GeoJsonPartitionReader(_, conf.value.value, required, geomKeep, geomNonNull, bboxPreds))
 }
 
 /** Shared document → feature iteration and pushed-filter match, used by the
@@ -703,10 +726,10 @@ private[sources] object GeoJsonFeatures {
     * array) or a newline-delimited stream of Features (the distributed
     * write form) — readValues iterates every top-level value either way.
     */
-  def iterate(path: String): Iterator[JsonNode] = {
+  def iterate(path: String, conf: Configuration): Iterator[JsonNode] = {
     val mapper = new ObjectMapper()
     val docs = mapper.readValues(
-      mapper.createParser(GeoJsonFetch.fetch(path)), classOf[JsonNode]).asScala
+      mapper.createParser(GeoJsonFetch.fetch(path, conf)), classOf[JsonNode]).asScala
     docs.flatMap { root =>
       if (root.isArray) root.elements().asScala
       else if (root.has("features")) root.get("features").elements().asScala
@@ -747,7 +770,7 @@ private[sources] object GeoJsonFeatures {
   * before any row is built (a feature with no geometry has a null type and
   * never matches, same as Spark's EqualTo null semantics).
   */
-class GeoJsonPartitionReader(path: String, required: StructType,
+class GeoJsonPartitionReader(path: String, conf: Configuration, required: StructType,
                              geomKeep: Option[Set[String]] = None,
                              geomNonNull: Boolean = false,
                              bboxPreds: Seq[GeoJsonBbox.BboxPred] = Seq.empty)
@@ -759,7 +782,7 @@ class GeoJsonPartitionReader(path: String, required: StructType,
 
   private val fileName = path.split('/').last
   private val features: Iterator[(JsonNode, Long)] =
-    GeoJsonFeatures.iterate(path).zipWithIndex.map { case (n, i) => (n, i.toLong) }
+    GeoJsonFeatures.iterate(path, conf).zipWithIndex.map { case (n, i) => (n, i.toLong) }
   private var current: InternalRow = _
 
   /** Coordinates of any geometry type, normalized to parts→points, each

@@ -554,6 +554,23 @@ class GeoJsonSourceSpec extends SparkSpec {
       "written sidecars must prune the disjoint query to zero fetches")
   }
 
+  test("an aborted write deletes _tmp with whatever a killed attempt left in it") {
+    val out = Files.createTempDirectory("geojson-abort").resolve("out")
+    def killedAttempt(): Unit = {
+      Files.createDirectories(out.resolve("_tmp"))
+      Files.writeString(out.resolve("_tmp/part-0-7.geojson"), feature)
+    }
+    val write = new graft.sources.GeoJsonWrite(out.toString, graft.sources.GeoJsonDataSource.Schema,
+      truncateFirst = false)
+    // a writer that never committed leaves a null slot in the messages
+    killedAttempt()
+    write.abort(Array(null))
+    assert(!Files.exists(out.resolve("_tmp")))
+    killedAttempt()
+    write.abort(0L, Array(null))
+    assert(!Files.exists(out.resolve("_tmp")))
+  }
+
   test("count(*) stays correct under a pushed bbox filter") {
     val far = feature.replace("[[325000.0, 673000.0], [325300.0, 673400.0]]",
       "[[5000.0, 8000.0], [5100.0, 8050.0]]")

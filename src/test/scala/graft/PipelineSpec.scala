@@ -200,7 +200,7 @@ class PipelineSpec extends SparkSpec {
     assert(spark.read.option("header", "true").csv(csv).count() == 2)
   }
 
-  test("the GeoJSON sink writes to a file: URI and refuses other schemes") {
+  test("the GeoJSON sink writes to a file: URI and to another filesystem's scheme") {
     val dir = Files.createTempDirectory("pipeline-uri").toString
     val in = s"$dir/in.geojson"
     Files.writeString(Paths.get(in), routeFeature(1, """{"route_id": "R1"}"""))
@@ -208,10 +208,13 @@ class PipelineSpec extends SparkSpec {
     val gj = Sinks.writeGeoJson(routes, s"file://$dir/out", "routes", "uri", Seq("route_id"))
     assert(new java.io.File(s"$dir/out/routes_uri.geojson").isDirectory)
     assert(spark.read.format("geojson").load(gj).count() == 1)
-    val ex = intercept[IllegalArgumentException] {
-      Sinks.writeGeoJson(routes, "memory://bucket/out", "routes", "uri", Seq("route_id"))
+    FlakyLocalFs.registered(spark) {
+      val other = Sinks.writeGeoJson(routes, s"graftflaky:$dir/flaky", "routes", "uri", Seq("route_id"))
+      assert(new java.io.File(s"$dir/flaky/routes_uri.geojson").isDirectory)
+      val back = spark.read.format("geojson").load(other)
+      assert(back.select(col("properties")("route_id")).collect().map(_.getString(0)).toSeq ==
+        Seq("R1"))
     }
-    assert(ex.getMessage.contains("memory:"), ex.getMessage)
   }
 
   test("a directory mixing the three shapes returns every feature") {

@@ -40,6 +40,16 @@ class TablesSpec extends SparkSpec {
     }
   }
 
+  test("documentsSpread sizes documents.parquet on a non-file scheme") {
+    FlakyLocalFs.registered(spark) {
+      val df = Tables.documentsSpread(spark, "graftflaky:" + sf("sf0.001"), minBytes = 1)
+      val plan = df.queryExecution.logical
+      assert(plan.collectFirst {
+        case r: org.apache.spark.sql.catalyst.plans.logical.Repartition => r
+      }.nonEmpty, plan.toString)
+    }
+  }
+
   test("a second Warehouse.table call for the same key runs no Spark job") {
     val root = Files.createTempDirectory("graft-wh-memo-").toString
     spark.conf.set("spark.graft.warehouseDir", root)

@@ -66,11 +66,8 @@ class TuneForSpec extends SparkSpec {
   test("a failed size lookup is not memoized: the next call sizes the corpus") {
     // the local filesystem under a scheme of its own, made to fail on demand:
     // a transient storage fault must not pin the fallback for the JVM's life
-    val hadoop = spark.sparkContext.hadoopConfiguration
-    hadoop.set("fs.graftflaky.impl", classOf[FlakyLocalFs].getName)
-    hadoop.setBoolean("fs.graftflaky.impl.disable.cache", true)
     val dir = "graftflaky:" + sf("sf0.001")
-    try keepingAdvisory {
+    FlakyLocalFs.registered(spark)(keepingAdvisory {
       spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "12345678")
       FlakyLocalFs.failing = true
       SparkEntry.tuneFor(spark, dir)
@@ -79,11 +76,7 @@ class TuneForSpec extends SparkSpec {
       FlakyLocalFs.failing = false
       // the same directory, now reachable: sized to the sub-floor advisory
       assert(advisoryAfter(dir) == (1L << 20))
-    } finally {
-      FlakyLocalFs.failing = false
-      hadoop.unset("fs.graftflaky.impl")
-      hadoop.unset("fs.graftflaky.impl.disable.cache")
-    }
+    })
   }
 
   test("a cluster-scale corpus saturates the 64 MB cap") {
@@ -99,19 +92,4 @@ class TuneForSpec extends SparkSpec {
       ()
     }
   }
-}
-
-/** The local filesystem under the `graftflaky:` scheme; while `failing` is
-  * set, every status lookup throws as an unreachable store would.
-  */
-class FlakyLocalFs extends org.apache.hadoop.fs.RawLocalFileSystem {
-  override def getUri: java.net.URI = java.net.URI.create("graftflaky:///")
-  override def getScheme: String = "graftflaky"
-  override def getFileStatus(f: org.apache.hadoop.fs.Path): org.apache.hadoop.fs.FileStatus =
-    if (FlakyLocalFs.failing) throw new java.io.IOException(s"transient fault reading $f")
-    else super.getFileStatus(f)
-}
-
-object FlakyLocalFs {
-  @volatile var failing = false
 }
