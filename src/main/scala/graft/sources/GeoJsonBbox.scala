@@ -113,18 +113,20 @@ object GeoJsonBbox {
     * hash would re-read the document the sidecar exists to avoid. Legacy
     * 4/6-field sidecars (no stamp / no CRC) are treated as stale.
     */
-  def sidecarOf(docPath: String,
-                conf: Configuration = GeoJsonDataSource.hadoopConf()): Option[Env] =
+  def sidecarOf(docPath: String, conf: Configuration): Option[Env] =
     try {
       val doc = new Path(docPath)
-      val fs = doc.getFileSystem(conf)
+      val fs = GeoJsonFetch.fileSystem(doc, conf)
       val parts = GeoJsonFetch.read(fs, sidecar(doc)).trim.split(",")
-      lazy val st = fs.getFileStatus(doc)
-      if (parts.length != 7 || parts(4).toLong != st.getLen ||
-          parts(5).toLong != st.getModificationTime ||
-          parts(6).toLong != headTailCrc(fs, doc, st.getLen)) None
+      if (parts.length != 7 || parts.drop(4).map(_.toLong).toSeq != stamp(fs, doc)) None
       else Some((parts(0).toDouble, parts(1).toDouble, parts(2).toDouble, parts(3).toDouble))
     } catch { case scala.util.control.NonFatal(_) => None }
+
+  /** A document's content stamp: byte length, mtime, head/tail CRC. */
+  private def stamp(fs: FileSystem, doc: Path): Seq[Long] = {
+    val st = fs.getFileStatus(doc)
+    Seq(st.getLen, st.getModificationTime, headTailCrc(fs, doc, st.getLen))
+  }
 
   /** CRC32 over the first and last 64 KB of the document — a bounded-I/O
     * content fingerprint (≤128 KB read however large the document), enough
@@ -156,17 +158,13 @@ object GeoJsonBbox {
     */
   def writeSidecar(docPath: String, env: Env, conf: Configuration): Unit = {
     val doc = new Path(docPath)
-    val fs = doc.getFileSystem(conf)
+    val fs = GeoJsonFetch.fileSystem(doc, conf)
     // A document deleted/replaced between the status and the CRC read must
     // not fail the sink's per-file commit — fall back to the no-stamp tuple
     // (the sidecar then just reads as stale, same as the doc-absent case).
-    val (len, mt, crc) =
-      try {
-        val st = fs.getFileStatus(doc)
-        (st.getLen, st.getModificationTime, headTailCrc(fs, doc, st.getLen))
-      } catch { case scala.util.control.NonFatal(_) => (0L, 0L, 0L) }
+    val st = try stamp(fs, doc) catch { case scala.util.control.NonFatal(_) => Seq(0L, 0L, 0L) }
     val out = fs.create(sidecar(doc), true)
-    try out.write(s"${env._1},${env._2},${env._3},${env._4},$len,$mt,$crc".getBytes(
+    try out.write(s"${env._1},${env._2},${env._3},${env._4},${st.mkString(",")}".getBytes(
       java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
   }
@@ -177,7 +175,7 @@ object GeoJsonBbox {
     * None for a document with no coordinates (no sidecar written — an empty
     * envelope cannot prune).
     */
-  def index(docPath: String, conf: Configuration = GeoJsonDataSource.hadoopConf()): Option[Env] = {
+  def index(docPath: String, conf: Configuration): Option[Env] = {
     val env = GeoJsonFeatures.iterate(docPath, conf)
       .flatMap(envelope)
       .foldLeft(Option.empty[Env]) { case (acc, e) => Some(union(acc, e)) }

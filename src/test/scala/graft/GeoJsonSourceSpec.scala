@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions.{array, broadcast, col, explode, lit, tran
 import java.nio.file.Files
 
 class GeoJsonSourceSpec extends SparkSpec {
+  private def hadoopConf = spark.sparkContext.hadoopConfiguration
 
   private def tmpFile(name: String, content: String): String = {
     val dir = Files.createTempDirectory("geojson").toFile
@@ -436,8 +437,8 @@ class GeoJsonSourceSpec extends SparkSpec {
         "[[325000.0, 673000.0], [325300.0, 673400.0]]",
         "[[5000.0, 8000.0], [5100.0, 8050.0]]")}]}""")
     // one-time spatial indexing writes the sidecars
-    assert(graft.sources.GeoJsonBbox.index(nearDoc).nonEmpty)
-    assert(graft.sources.GeoJsonBbox.index(farDoc).nonEmpty)
+    assert(graft.sources.GeoJsonBbox.index(nearDoc, hadoopConf).nonEmpty)
+    assert(graft.sources.GeoJsonBbox.index(farDoc, hadoopConf).nonEmpty)
     val df = envFilter(spark.read.format("geojson").load(nearDoc, farDoc),
       320000, 670000, 330000, 680000)
     val before = graft.sources.GeoJsonFetch.fetches.get()
@@ -466,7 +467,7 @@ class GeoJsonSourceSpec extends SparkSpec {
       s"""{"type": "FeatureCollection", "features": [${feature.replace(
         "[[325000.0, 673000.0], [325300.0, 673400.0]]",
         "[[5000.0, 8000.0], [5100.0, 8050.0]]")}]}""")
-    assert(graft.sources.GeoJsonBbox.index(doc).nonEmpty)
+    assert(graft.sources.GeoJsonBbox.index(doc, hadoopConf).nonEmpty)
     val f = new java.io.File(doc)
     val sc = new java.io.File(f.getParentFile, "." + f.getName + ".bbox")
     Files.write(f.toPath,
@@ -474,14 +475,14 @@ class GeoJsonSourceSpec extends SparkSpec {
         .getBytes("UTF-8"))
     // force doc strictly newer than the sidecar (FS mtime granularity)
     assert(f.setLastModified(sc.lastModified + 2000))
-    assert(graft.sources.GeoJsonBbox.sidecarOf(doc).isEmpty,
+    assert(graft.sources.GeoJsonBbox.sidecarOf(doc, hadoopConf).isEmpty,
       "an older-than-document sidecar must read as absent")
     assert(envFilter(spark.read.format("geojson").load(doc),
       320000, 670000, 330000, 680000).count() == 1,
       "stale sidecar pruned a document whose new features match")
     // re-indexing refreshes the envelope and pruning works again
-    assert(graft.sources.GeoJsonBbox.index(doc).nonEmpty)
-    assert(graft.sources.GeoJsonBbox.sidecarOf(doc).nonEmpty)
+    assert(graft.sources.GeoJsonBbox.index(doc, hadoopConf).nonEmpty)
+    assert(graft.sources.GeoJsonBbox.sidecarOf(doc, hadoopConf).nonEmpty)
     val before = graft.sources.GeoJsonFetch.fetches.get()
     assert(envFilter(spark.read.format("geojson").load(doc),
       0, 0, 10, 10).count() == 0)
@@ -496,7 +497,7 @@ class GeoJsonSourceSpec extends SparkSpec {
     // the document (mtime moved earlier than the recorded one).
     val doc = tmpFile("stamp.json",
       s"""{"type": "FeatureCollection", "features": [$feature]}""")
-    assert(graft.sources.GeoJsonBbox.index(doc).nonEmpty)
+    assert(graft.sources.GeoJsonBbox.index(doc, hadoopConf).nonEmpty)
     val f = new java.io.File(doc)
     val origMtime = f.lastModified
     // (a) rewrite with different content, pin mtime back to the recorded one
@@ -505,18 +506,18 @@ class GeoJsonSourceSpec extends SparkSpec {
         "[[325000.0, 673000.0], [325300.0, 673400.0]]",
         "[[5000.0, 8000.0], [5100.0, 8050.0]]")}]}""".getBytes("UTF-8"))
     assert(f.setLastModified(origMtime))
-    assert(graft.sources.GeoJsonBbox.sidecarOf(doc).isEmpty,
+    assert(graft.sources.GeoJsonBbox.sidecarOf(doc, hadoopConf).isEmpty,
       "a same-mtime rewrite with different length must read as stale")
     // re-index over the new content -> fresh again
-    assert(graft.sources.GeoJsonBbox.index(doc).nonEmpty)
-    assert(graft.sources.GeoJsonBbox.sidecarOf(doc).nonEmpty)
+    assert(graft.sources.GeoJsonBbox.index(doc, hadoopConf).nonEmpty)
+    assert(graft.sources.GeoJsonBbox.sidecarOf(doc, hadoopConf).nonEmpty)
     // (b) backdate the document without changing length: mtime mismatch
     assert(f.setLastModified(f.lastModified - 5000))
-    assert(graft.sources.GeoJsonBbox.sidecarOf(doc).isEmpty,
+    assert(graft.sources.GeoJsonBbox.sidecarOf(doc, hadoopConf).isEmpty,
       "a backdated rewrite must read as stale (recorded mtime differs)")
     // (c) the last edge: SAME-length rewrite pinned back to the recorded
     // mtime — length and mtime both match, only the head/tail CRC differs
-    assert(graft.sources.GeoJsonBbox.index(doc).nonEmpty)
+    assert(graft.sources.GeoJsonBbox.index(doc, hadoopConf).nonEmpty)
     val mt = f.lastModified
     val bytes = Files.readAllBytes(f.toPath)
     // flip digits in place: '5' -> '9' keeps every coordinate the same width
@@ -528,7 +529,7 @@ class GeoJsonSourceSpec extends SparkSpec {
     Files.write(f.toPath, rewritten.getBytes("UTF-8"))
     assert(f.length == bytes.length, "fixture must preserve byte length")
     assert(f.setLastModified(mt))
-    assert(graft.sources.GeoJsonBbox.sidecarOf(doc).isEmpty,
+    assert(graft.sources.GeoJsonBbox.sidecarOf(doc, hadoopConf).isEmpty,
       "a same-length same-mtime rewrite must read as stale (CRC differs)")
   }
 
@@ -569,6 +570,19 @@ class GeoJsonSourceSpec extends SparkSpec {
     killedAttempt()
     write.abort(0L, Array(null))
     assert(!Files.exists(out.resolve("_tmp")))
+  }
+
+  test("a local write leaves plain files that still read after an in-place edit") {
+    val fc = tmpFile("plain.json", s"""{"type": "FeatureCollection", "features": [$feature]}""")
+    val out = Files.createTempDirectory("geojson-plain").resolve("out")
+    spark.read.format("geojson").load(fc)
+      .write.format("geojson").mode("overwrite").save(out.toString)
+    val names = out.toFile.list().toSeq
+    assert(names.exists(_.endsWith(".geojson")) && !names.exists(_.endsWith(".crc")), names)
+    // no checksum file contradicts an out-of-band edit of a part
+    val part = out.toFile.listFiles().filter(_.getName.endsWith(".geojson")).head.toPath
+    Files.writeString(part, Files.readString(part).replace("\"properties\"", "\"properties\" "))
+    assert(spark.read.format("geojson").load(out.toString).count() == 1)
   }
 
   test("count(*) stays correct under a pushed bbox filter") {
