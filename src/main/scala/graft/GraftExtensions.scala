@@ -1,6 +1,6 @@
 package graft
 
-import graft.plans.{AsOfJoin, BloomAgg, BpeEncode, MightContain, MinhashSig, OsgbToWgs84, ShingleHashes, SimhashSig, SimhashSig64, SortedIntersectCount, TopKAgg, VectorCosine}
+import graft.plans.{AsOfJoin, BloomAgg, BpeEncode, MightContain, MinhashSig, OsGridRef, OsgbToWgs84, PartsLength, ShingleHashes, SimhashSig, SimhashSig64, SortedIntersectCount, TopKAgg, VectorCosine}
 import org.apache.spark.{SparkConf, SparkEnv}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.SparkSessionExtensionsProvider
@@ -81,6 +81,9 @@ class GraftExtensions extends SparkSessionExtensionsProvider {
       BitwiseOr(spread(c(0)), ShiftLeft(spread(c(1)), Literal(1)))
     }
     fn("graft_osgb", classOf[OsgbToWgs84].getName, 2)(c => OsgbToWgs84(c(0), c(1)))
+    fn("graft_osgrid", classOf[OsGridRef].getName, 3)(c =>
+      OsGridRef(c(0), c(1), intLiteral(c(2), "graft_osgrid(e, n, precision): precision")))
+    fn("graft_parts_length", classOf[PartsLength].getName, 1)(c => PartsLength(c(0)))
     // whole-operator tier: native as-of join (logical node + pushdown rule +
     // strategy + sort-merge physical operator)
     ext.injectPlannerStrategy(_ => AsOfJoin.AsOfJoinStrategy)

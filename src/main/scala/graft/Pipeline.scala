@@ -1,8 +1,7 @@
 package graft
 
-import graft.functions.{Native, OsGrid, Wkt}
+import graft.functions.{Native, Wkt}
 import graft.sinks.Sinks
-import graft.sources.GeoJson
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -17,9 +16,10 @@ import org.apache.spark.sql.functions._
   * a declarative Spark plan (one scan, zero driver-side loops). Every entry
   * point reads through the connector: [[processRoutesNative]] is the
   * enrichment, and [[processRoutes]] is it plus the typed property flatten
-  * the file sinks write. Reprojection is the native `graft_osgb` expression,
-  * which runs the same double-op sequence as the shared-SQL transform the
-  * oracle uses (functions/Osgb.scala).
+  * the file sinks write. Length, reprojection and grid reference are the
+  * native `graft_parts_length`, `graft_osgb` and `graft_osgrid` expressions;
+  * `graft_osgb` runs the same double-op sequence as the shared-SQL transform
+  * the oracle uses (functions/Osgb.scala).
   */
 object Pipeline {
 
@@ -58,20 +58,22 @@ object Pipeline {
   }
 
   /** The enrichment over the connector's own columns: DSv2 read (a file, a
-    * directory of documents, multi-part aware, pruned at the reader),
-    * nested-fold multi-part length, start easting/northing, then the
-    * `graft_osgb` lat/lon rounded to 6 decimals (~0.1 m) and the grid
-    * reference.
+    * directory of documents, multi-part aware, pruned at the reader), then
+    * one projection that appends the `graft_parts_length` route length, the
+    * start easting/northing, the `graft_osgb` lat/lon rounded to 6 decimals
+    * (~0.1 m) and the `graft_osgrid` grid reference. The three nodes are
+    * single static calls, so building the frame analyses a handful of
+    * expressions rather than the composed trees they replaced.
     */
   def processRoutesNative(spark: SparkSession, geojsonPath: String): DataFrame = {
     val feats = spark.read.format("geojson").load(geojsonPath)
     val start = element_at(element_at(col("parts"), 1), 1)
-    val ll = Native.osgb(col("easting"), col("northing"))
-    GeoJson.multiPartLength(feats)
-      .withColumn("easting", element_at(start, 1).cast("double"))
-      .withColumn("northing", element_at(start, 2).cast("double"))
-      .withColumn("lat", round(element_at(ll, 1), 6))
-      .withColumn("lon", round(element_at(ll, 2), 6))
-      .withColumn("os_gridref", OsGrid.gridRef(col("easting"), col("northing"), 10))
+    val (e, n) = (element_at(start, 1).cast("double"), element_at(start, 2).cast("double"))
+    val ll = Native.osgb(e, n)
+    feats.select(col("*"),
+      Native.partsLength(col("parts")).as("route_length_m"),
+      e.as("easting"), n.as("northing"),
+      round(element_at(ll, 1), 6).as("lat"), round(element_at(ll, 2), 6).as("lon"),
+      Native.osgrid(e, n, 10).as("os_gridref"))
   }
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import graft.plans.{BloomAgg, MightContain, MinhashSig, OsgbToWgs84, ShingleHashes, SimhashSig, SimhashSig64, SortedIntersectCount, TopKAgg, VectorCosine}
+import graft.plans.{BloomAgg, MightContain, MinhashSig, OsGridRef, OsgbToWgs84, PartsLength, ShingleHashes, SimhashSig, SimhashSig64, SortedIntersectCount, TopKAgg, VectorCosine}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.graftglue.Bridge.{columnOf, expressionOf => e}
@@ -45,4 +45,11 @@ object Native {
 
   /** `graft_osgb`: EPSG:27700 easting/northing → [lat, lon] WGS84 degrees. */
   def osgb(easting: Column, northing: Column): Column = columnOf(OsgbToWgs84(e(easting), e(northing)))
+
+  /** `graft_osgrid`: OS grid reference of an easting/northing at precision 6, 8 or 10. */
+  def osgrid(easting: Column, northing: Column, precision: Int): Column =
+    columnOf(OsGridRef(e(easting), e(northing), precision))
+
+  /** `graft_parts_length`: planar length of a connector `parts` geometry. */
+  def partsLength(parts: Column): Column = columnOf(PartsLength(e(parts)))
 }

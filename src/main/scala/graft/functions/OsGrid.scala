@@ -1,50 +1,54 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** OS grid-reference conversion (easting/northing → "NT 25940 73060").
   *
   * Same semantics as reference src/utils/geotiles.py:12-59 (precision 6 = 100 m,
-  * 8 = 10 m, 10 = 1 m; grid letters skip 'I'), re-expressed as pure Catalyst
-  * column arithmetic — no UDF, whole-stage-codegen'd, so it runs at scan speed
-  * on 100 TB. A plain-Scala twin ([[OsGrid.gridRefScala]]) exists for
-  * property-based tests.
+  * 8 = 10 m, 10 = 1 m; grid letters skip 'I'). [[gridRef]] is the kernel of
+  * the native `graft_osgrid` expression (plans/OsGridRef, built through
+  * `Native.osgrid`): one static call per row from generated code. Two
+  * independent renderings stay as its references: [[gridRefSql]], the text the
+  * DuckDB oracle runs, and [[gridRefScala]], the plain-Scala twin the specs
+  * compare against.
   */
 object OsGrid {
   private val Chars = "ABCDEFGHJKLMNOPQRSTUVWXYZ" // no I
+  private val Empty = UTF8String.fromString("")
 
-  /** Grid letters + digits at the given precision, as a Column. */
-  def gridRef(e: Column, n: Column, precision: Int): Column = {
-    val e100k = floor(e / 100000.0d).cast("long")
-    // The reference computes letter indices from the RAW northing (including
-    // n >= 1,000,000, where it then subtracts 1,000,000 only from the digit
-    // remainder — geotiles.py:40-45); we mirror that.
-    val n100k = floor(n / 100000.0d).cast("long")
-    val l1 = (lit(19L) - n100k) - (lit(19L) - n100k) % 5L + floor((e100k + 10L) / 5.0d).cast("long")
-    val l2 = ((lit(19L) - n100k) * 5L) % 25L + e100k % 5L
-    val letters = concat(
-      substring(lit(Chars), 1, 25).substr(l1.cast("int") + 1, lit(1)),
-      substring(lit(Chars), 1, 25).substr(l2.cast("int") + 1, lit(1))
-    )
-    val eRem = e.cast("long") - e100k * 100000L
-    val nAdj = when(n >= 1000000L, n.cast("long") - 1000000L).otherwise(n.cast("long"))
-    val nRem = nAdj - n100k * 100000L
-    // Python's rjust pads but never truncates (matters for the degenerate
-    // n>=1M inputs, where the reference emits negative digit groups); Spark's
-    // lpad truncates, so guard it.
-    def digits(v: Column, div: Long, w: Int): Column = {
-      val s = floor(v / lit(div.toDouble)).cast("long").cast("string")
-      when(length(s) >= w, s).otherwise(lpad(s, w, "0"))
+  /** Grid letters + digits at `precision` (6, 8 or 10); "" out of range.
+    *
+    * Whole metres are taken by truncation (`toLong`, Spark's non-ANSI cast,
+    * so NaN reads as 0), and the digit groups are floors of their quotients.
+    * The letter indices come from the RAW northing, including n >= 1,000,000,
+    * where the reference subtracts 1,000,000 only from the digit remainder
+    * (geotiles.py:40-45), so those inputs give negative digit groups.
+    */
+  def gridRef(e: Double, n: Double, precision: Int): UTF8String = {
+    val e100k = java.lang.Math.floor(e / 100000.0d).toLong
+    val n100k = java.lang.Math.floor(n / 100000.0d).toLong
+    // out of range → empty string, as in the reference (geotiles.py:29-30)
+    if (e100k < 0L || e100k > 6L || n100k < 0L || n100k > 12L) return Empty
+    val l1 = (19L - n100k) - (19L - n100k) % 5L + java.lang.Math.floor((e100k + 10L) / 5.0d).toLong
+    val l2 = ((19L - n100k) * 5L) % 25L + e100k % 5L
+    val eRem = e.toLong - e100k * 100000L
+    val nRem = (if (n >= 1000000L) n.toLong - 1000000L else n.toLong) - n100k * 100000L
+    val sb = new java.lang.StringBuilder(14).append(Chars.charAt(l1.toInt)).append(Chars.charAt(l2.toInt))
+    // Python's rjust pads but never truncates (the negative n >= 1M groups
+    // are wider than `w`)
+    def digits(v: Long, div: Double, w: Int): Unit = {
+      val s = java.lang.Long.toString(java.lang.Math.floor(v / div).toLong)
+      var pad = w - s.length
+      while (pad > 0) { sb.append('0'); pad -= 1 }
+      sb.append(s)
     }
-    val body = precision match {
-      case 6  => concat(letters, digits(eRem, 100L, 3), digits(nRem, 100L, 3))
-      case 8  => concat_ws(" ", letters, digits(eRem, 10L, 4), digits(nRem, 10L, 4))
-      case 10 => concat_ws(" ", letters, digits(eRem, 1L, 5), digits(nRem, 1L, 5))
-      case p  => throw new IllegalArgumentException(s"precision must be 6, 8 or 10, got $p")
+    precision match {
+      case 6 => digits(eRem, 100.0d, 3); digits(nRem, 100.0d, 3)
+      case 8 => sb.append(' '); digits(eRem, 10.0d, 4); sb.append(' '); digits(nRem, 10.0d, 4)
+      case 10 => sb.append(' '); digits(eRem, 1.0d, 5); sb.append(' '); digits(nRem, 1.0d, 5)
+      case p => throw new IllegalArgumentException(s"precision must be 6, 8 or 10, got $p")
     }
-    // Out-of-range → empty string, as in the reference (geotiles.py:29-30).
-    when(e100k < 0L || e100k > 6L || n100k < 0L || n100k > 12L, lit("")).otherwise(body)
+    UTF8String.fromString(sb.toString)
   }
 
   /** DuckDB-SQL rendering of the same math over easting/northing SQL snippets

@@ -119,8 +119,8 @@ object Routes {
   )
 
   /** Multi-part geometry round-trip: MULTILINESTRING serialize → parse (part
-    * count, first/last coordinates) plus total multi-part length via the same
-    * nested fold the GeoJSON connector's `parts` column uses
+    * count, first/last coordinates) plus total multi-part length through the
+    * `graft_parts_length` node the GeoJSON connector's `parts` column uses
     * ([[graft.sources.GeoJson.multiPartLength]]). The reference handles
     * multi-part geometries through shapely (app/app.py:11,
     * process_cycle_networks.py:91 — `row.geometry.length` sums parts).
@@ -137,17 +137,12 @@ object Routes {
               array(Geom.e2.cast("double"), Geom.n2.cast("double"))),
         array(array(x3.cast("double"), y3.cast("double")),
               array(x4.cast("double"), y4.cast("double"))))
-      graft.sources.GeoJson.multiPartLength(
-        Tables.lineitem(s, d).select(
-          col("l_orderkey"), col("l_linenumber"), wkt.as("geometry_wkt"),
-          Wkt.numParts(wkt).as("n_parts"),
-          Wkt.parseMultiFirstX(wkt).as("parsed_x1"),
-          Wkt.parseMultiLastY(wkt).as("parsed_y4"),
-          parts.as("parts")))
-        .select(
-          col("l_orderkey"), col("l_linenumber"), col("geometry_wkt"),
-          col("n_parts"), col("parsed_x1"), col("parsed_y4"),
-          round(col("route_length_m"), 6).as("route_length_m"))
+      Tables.lineitem(s, d).select(
+        col("l_orderkey"), col("l_linenumber"), wkt.as("geometry_wkt"),
+        Wkt.numParts(wkt).as("n_parts"),
+        Wkt.parseMultiFirstX(wkt).as("parsed_x1"),
+        Wkt.parseMultiLastY(wkt).as("parsed_y4"),
+        round(Native.partsLength(parts), 6).as("route_length_m"))
         .orderBy("l_orderkey", "l_linenumber")
     }, {
       val (x3, y3) = (s"(${Geom.e2Sql} + 1000)", s"(${Geom.n2Sql} + 1000)")
@@ -164,7 +159,8 @@ object Routes {
     }
   )
 
-  /** OS grid reference at precision 6/8/10 — geotiles.py:12-59. */
+  /** OS grid reference at precision 6/8/10 — geotiles.py:12-59 — through the
+    * native `graft_osgrid` node; the oracle runs [[OsGrid.gridRefSql]]. */
   val osGridRef = Q(
     "q_os_gridref",
     (s, d) => {
@@ -174,9 +170,9 @@ object Routes {
         col("p_partkey"),
         e.as("easting"),
         n.as("northing"),
-        OsGrid.gridRef(e, n, 6).as("gridref6"),
-        OsGrid.gridRef(e, n, 8).as("gridref8"),
-        OsGrid.gridRef(e, n, 10).as("gridref10")
+        Native.osgrid(e, n, 6).as("gridref6"),
+        Native.osgrid(e, n, 8).as("gridref8"),
+        Native.osgrid(e, n, 10).as("gridref10")
       ).orderBy("p_partkey")
     }, {
       val e = Geom.pointESql("p_partkey")

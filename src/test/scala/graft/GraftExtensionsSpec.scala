@@ -10,7 +10,8 @@ class GraftExtensionsSpec extends SparkSpec {
     "graft_cosine" -> 2, "graft_sorted_isect" -> 2, "graft_topk" -> 3,
     "graft_minhash" -> 2, "graft_bpe" -> 2, "graft_shingle_hashes" -> 2,
     "graft_simhash" -> 1, "graft_simhash64" -> 1, "graft_bloom" -> 3,
-    "graft_might_contain" -> 2, "graft_morton" -> 2, "graft_osgb" -> 2)
+    "graft_might_contain" -> 2, "graft_morton" -> 2, "graft_osgb" -> 2,
+    "graft_osgrid" -> 3, "graft_parts_length" -> 1)
 
   test("every graft_* function rejects a wrong arity, naming its signature") {
     val registered = spark.catalog.listFunctions().collect().map(_.name)

@@ -1,6 +1,6 @@
 package graft
 
-import graft.plans.{BloomAgg, MightContain, MinhashSig, OsgbToWgs84, ShingleHashes, SimhashSig, SimhashSig64, SortedIntersectCount, TopKAgg, VectorCosine}
+import graft.plans.{BloomAgg, MightContain, MinhashSig, OsGridRef, OsgbToWgs84, PartsLength, ShingleHashes, SimhashSig, SimhashSig64, SortedIntersectCount, TopKAgg, VectorCosine}
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.ConcurrentLinkedQueue
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -28,6 +28,8 @@ class NativeWithoutRegistrySpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val minhash = Seq(classOf[ShingleHashes], classOf[MinhashSig])
     Seq(
       "q_reproject" -> Seq(classOf[OsgbToWgs84]),
+      "q_os_gridref" -> Seq(classOf[OsGridRef]),
+      "q_wkt_multi" -> Seq(classOf[PartsLength]),
       "q_ann_cosine" -> Seq(classOf[VectorCosine]),
       "q_ann_lsh" -> Seq(classOf[VectorCosine]),
       "q_ann_recall" -> Seq(classOf[VectorCosine]),
@@ -120,7 +122,7 @@ class NativeWithoutRegistrySpec extends SparkSpec with AdaptiveSparkPlanHelper {
     }
   }
 
-  test("both route pipelines reproject through graft_osgb without the registry") {
+  test("both route pipelines run graft_osgb, graft_osgrid and graft_parts_length without the registry") {
     val dir = Files.createTempDirectory("native-routes")
     val in = dir.resolve("routes.json").toString
     val feature = (id: Int, e: Double, n: Double) =>
@@ -129,17 +131,18 @@ class NativeWithoutRegistrySpec extends SparkSpec with AdaptiveSparkPlanHelper {
          |  "coordinates": [[$e, $n], [${e + 300}, ${n + 400}]]}}""".stripMargin
     Files.writeString(Paths.get(in), s"""{"type": "FeatureCollection", "features": [
       |${feature(1, 325940.0, 673060.0)}, ${feature(2, 530000.0, 180000.0)}]}""".stripMargin)
-    val cols = Seq("route_id", "lat", "lon", "os_gridref")
+    val cols = Seq("route_id", "route_length_m", "lat", "lon", "os_gridref")
     Seq[(String, (SparkSession, String) => DataFrame)](
       "processRoutes" -> ((s, p) => Pipeline.processRoutes(s, p).select(cols.head, cols.tail: _*)),
       "processRoutesNative" -> ((s, p) => Pipeline.processRoutesNative(s, p)
-        .selectExpr("properties['route_id'] AS route_id", "lat", "lon", "os_gridref"))
+        .selectExpr("properties['route_id'] AS route_id", "route_length_m", "lat", "lon", "os_gridref"))
     ).foreach { case (name, build) =>
       val want = build(spark, in).orderBy("route_id").collect().map(_.toString).toSeq
       val (got, plans) = runBare(build(_, in).orderBy("route_id"))
       assert(want.size == 2, s"$name: $want")
       assert(got == want, s"$name differs on the session without graft_* functions")
-      assert(missing(plans, Seq(classOf[OsgbToWgs84])).isEmpty, s"$name executed no OsgbToWgs84")
+      val absent = missing(plans, Seq(classOf[OsgbToWgs84], classOf[OsGridRef], classOf[PartsLength]))
+      assert(absent.isEmpty, s"$name executed no ${absent.mkString(", ")}")
     }
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.OsGrid
+import graft.functions.{Native, OsGrid}
 import org.apache.spark.sql.functions._
 
 class OsGridSpec extends SparkSpec {
@@ -20,15 +20,15 @@ class OsGridSpec extends SparkSpec {
     assert(OsGrid.gridRefScala(-1, 0, 10) == "")
   }
 
-  test("gridRef column expression agrees with the Scala twin") {
+  test("graft_osgrid column expression agrees with the Scala twin") {
     import spark.implicits._
     val pts = for { e <- 0 until 700000 by 97013; n <- 0 until 1300000 by 104729 } yield (e.toLong, n.toLong)
     val df = pts.toDF("e", "n")
     val got = df.select(
       col("e"), col("n"),
-      OsGrid.gridRef(col("e"), col("n"), 6).as("g6"),
-      OsGrid.gridRef(col("e"), col("n"), 8).as("g8"),
-      OsGrid.gridRef(col("e"), col("n"), 10).as("g10")
+      Native.osgrid(col("e"), col("n"), 6).as("g6"),
+      Native.osgrid(col("e"), col("n"), 8).as("g8"),
+      Native.osgrid(col("e"), col("n"), 10).as("g10")
     ).collect()
     got.foreach { r =>
       val (e, n) = (r.getLong(0).toDouble, r.getLong(1).toDouble)

