@@ -4,7 +4,6 @@ import graft.functions.OsGrid
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, DoubleType, StringType}
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Native OS grid reference: `graft_osgrid(easting, northing, precision)` →
   * "NT 25940 73060" at precision 10 (8 → "NT 2594 7306", 6 → "NT259730"),
@@ -12,9 +11,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * One node with one static call into [[OsGrid.gridRef]] per row. The
   * composed `when`/`concat`/`floor` tree it replaced repeated its 100 km
-  * subtrees in every branch, and analysing it cost more than the scan it
-  * ran over. Numeric inputs are cast to double, as the composed tree's
-  * division cast them.
+  * subtrees in every branch, and analysing it took most of the route
+  * pipeline's set-up. Numeric inputs are cast to double, as the composed
+  * tree's division cast them.
   */
 case class OsGridRef(left: Expression, right: Expression, precision: Int)
     extends BinaryExpression with ImplicitCastInputTypes {

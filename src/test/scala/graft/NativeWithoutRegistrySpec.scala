@@ -122,7 +122,7 @@ class NativeWithoutRegistrySpec extends SparkSpec with AdaptiveSparkPlanHelper {
     }
   }
 
-  test("both route pipelines run graft_osgb, graft_osgrid and graft_parts_length without the registry") {
+  test("both route pipelines reproject through graft_osgb without the registry") {
     val dir = Files.createTempDirectory("native-routes")
     val in = dir.resolve("routes.json").toString
     val feature = (id: Int, e: Double, n: Double) =>

@@ -20,7 +20,7 @@ class OsGridSpec extends SparkSpec {
     assert(OsGrid.gridRefScala(-1, 0, 10) == "")
   }
 
-  test("graft_osgrid column expression agrees with the Scala twin") {
+  test("gridRef column expression agrees with the Scala twin") {
     import spark.implicits._
     val pts = for { e <- 0 until 700000 by 97013; n <- 0 until 1300000 by 104729 } yield (e.toLong, n.toLong)
     val df = pts.toDF("e", "n")
